@@ -110,22 +110,16 @@ def materialize(df) -> int:
     return 0
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    spark = get_session(app_name="bdt-bench")
-    specs = load_all_operators()
-    keys = [k for k in HEADLINE if k in specs]
+def time_keys(spark, specs, keys, sf_dir):
+    """Best-of-3 and median-of-3 wall seconds per key.
 
-    # Warmup: JVM + codegen + parquet footer caches.
-    materialize(specs[keys[0]].fn(spark, sf_dir))
-
-    # Three runs per query: this sandbox shares a host and single runs
-    # swing up to 5x on untouched queries (BASELINE.md "Measurement
-    # caveat").  ``value``/``queries`` stay best-of-runs (minimum —
-    # measures the plan, comparable with BENCH_r01/r02); the median-of-3
-    # is reported alongside so host-noise swings are visible instead of
-    # reading as plan regressions.
+    Three runs per query: this sandbox shares a host and single runs
+    swing up to 5x on untouched queries (BASELINE.md "Measurement
+    caveat").  The best (minimum) measures the plan and stays
+    comparable with BENCH_r01/r02; the median is reported alongside so
+    host-noise swings are visible instead of reading as plan
+    regressions.
+    """
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     for key in keys:
@@ -136,6 +130,20 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         timings[key] = round(min(runs), 4)
         medians[key] = round(sorted(runs)[1], 4)
+    return timings, medians
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    spark = get_session(app_name="bdt-bench")
+    specs = load_all_operators()
+    keys = [k for k in HEADLINE if k in specs]
+
+    # Warmup: JVM + codegen + parquet footer caches.
+    materialize(specs[keys[0]].fn(spark, sf_dir))
+
+    timings, medians = time_keys(spark, specs, keys, sf_dir)
     total = round(sum(timings.values()), 4)
     total_median = round(sum(medians.values()), 4)
 
@@ -154,38 +162,13 @@ def main() -> None:
     # told apart from host noise without a manual median-of-5.  Same
     # 3-run best/median discipline as the batch and LLM sections now;
     # pre-r10 streaming numbers are single-run and read ≥ best-of-3.
-    stream_timings: dict[str, float] = {}
-    stream_medians: dict[str, float] = {}
-    for key in stream_keys:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(specs[key].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        stream_timings[key] = round(min(runs), 4)
-        stream_medians[key] = round(sorted(runs)[1], 4)
-
-    llm_timings: dict[str, float] = {}
-    llm_medians: dict[str, float] = {}
-    for key in (k for k in HEADLINE_LLM if k in specs):
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(specs[key].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        llm_timings[key] = round(min(runs), 4)
-        llm_medians[key] = round(sorted(runs)[1], 4)
-
-    tpch_timings: dict[str, float] = {}
-    tpch_medians: dict[str, float] = {}
-    for key in (k for k in HEADLINE_TPCH if k in specs):
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(specs[key].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        tpch_timings[key] = round(min(runs), 4)
-        tpch_medians[key] = round(sorted(runs)[1], 4)
+    stream_timings, stream_medians = time_keys(spark, specs, stream_keys, sf_dir)
+    llm_timings, llm_medians = time_keys(
+        spark, specs, [k for k in HEADLINE_LLM if k in specs], sf_dir
+    )
+    tpch_timings, tpch_medians = time_keys(
+        spark, specs, [k for k in HEADLINE_TPCH if k in specs], sf_dir
+    )
 
     print(
         json.dumps(

@@ -202,9 +202,11 @@ def embed_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .collect()
         )
-        rows.extend(
+        if not nxt:  # pool exhausted: later steps would score nothing
+            break
+        r = nxt[0]
+        rows.append(
             (k, r["vec_id"], float(r["rel"]), float(r["score"]), r["embedding"])
-            for r in nxt[:1]
         )
     id_type = dict(pool.dtypes)["vec_id"]
     return spark.createDataFrame(

@@ -22,10 +22,7 @@ from ..tables import load
 
 # Stage constants come FROM the stage operators' modules so a
 # recalibration there cannot silently desynchronize this oracle from
-# the Spark composite (which calls those operators).  Module-level
-# import is order-safe: every key these modules register sits in the
-# explicit _R5_WINDOW predecessor (_R4_WINDOW), whose position was fixed regardless of import
-# order.
+# the Spark composite (which calls those operators).
 from ..text.quality_rules import (  # noqa: E402
     MAX_MEAN_WORD_LEN,
     MAX_WORDS,

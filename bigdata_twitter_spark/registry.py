@@ -30,460 +30,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# The driver evaluates exactly the first 50 ``queries()`` keys per
-# round (every round so far cut at key #50 in registration order).
-#
-# == Certification plan (VERDICT r7 #1/#2, continued r8 #1/#6) =====
-# The registry is FROZEN at 307 keys until the never-checked backlog
-# drains.  After round 8, 42 keys still have no driver row (all
-# local-parity hash_pass in PARITY_r08.json) and 16 keys carried
-# r3-latest rows (8 refreshed in r9, 8 scheduled r10).  The drain
-# schedule, so no key silently ages out:
-#
-#   r8 window (DONE — CORRECTNESS_r08.json 50/50 pass): the
-#     highest-traffic 50 of the 92 never-checked — TPC-H-shaped aggs,
-#     quantized-ANN chain, image pHash/dedup + LSH recall gate, the
-#     stream trio, the full statistics wave, graph metrics,
-#     image/audio features, CDC + lakehouse scan/table keys.
-#
-#   r9 window (_R9_WINDOW below): the remaining 42 never-checked —
-#     embed_mmr_diverse, embed_centroid_confusion,
-#     embed_silhouette_centroid, embed_contamination_eval,
-#     train_curriculum_schedule, train_packing_efficiency,
-#     train_dataset_card, join_fuzzy_levenshtein, agg_share_of_parent,
-#     agg_abc_classification, agg_trimmed_mean, win_running_distinct,
-#     sort_range_boundaries, agg_skyline_pareto, ts_burst_hysteresis,
-#     ts_rolling_median, ts_attribution_last_touch,
-#     ts_sequence_regex_match, ts_markov_transitions,
-#     trending_decayed_topk, ts_anomaly_mad, ts_weighted_moving_avg,
-#     ts_bollinger_bands, ts_rsi_wilder, ts_drawdown_max,
-#     ts_entropy_daily, ts_rolling_correlation, ts_bounce_rate_daily,
-#     ts_new_vs_returning_daily, ts_cohort_ltv, ts_dow_hod_heatmap,
-#     text_lang_id_eval, text_vocab_growth, text_readability_flesch,
-#     text_zipf_fit, text_burstiness_dispersion,
-#     text_js_divergence_langs, sample_stratified_neyman,
-#     sample_balanced_classes, agg_gini_impurity, agg_benford_digits,
-#     agg_tukey_fences — plus the first 8 of the 16 r3-stale keys
-#     (fn_json, fn_struct, text_tf_idf, inverted_index, profile_table,
-#     sample_hash_stratified, sample_exact_k_stratified,
-#     agg_mode_per_group).
-#
-#   r10 window (_R10_WINDOW below — DONE, CORRECTNESS_r10.json 50/50
-#     pass): the remaining 8 r3-stale keys (trending_topk_terms,
-#     tweet_hashtag_topk, win_session_paths, win_streak_longest,
-#     ts_ewma, ts_downsample_ohlc, text_bigram_familiarity,
-#     text_scrub_denylist), then the 42 oldest-r4 keys to fill 50.
-#
-#   r11 window (_R11_WINDOW below — ACTIVE this round, first in the
-#     check order): normal oldest-first freshness rotation — the 7
-#     remaining r4-vintage keys, then the 43 oldest r5-vintage keys
-#     (load order within a vintage).  Computed from the latest driver
-#     row per key across CORRECTNESS_r01–r09 + the r10 window.
-#
-#   r12 window (_R12_WINDOW below, pre-staged): the r11 unfreeze keys
-#     first (never-checked), then the 7 remaining r5-vintage keys and
-#     the 41 oldest r6-vintage keys.  The r11 additions registered
-#     AFTER the staged windows (agg_q6_forecast_revenue,
-#     agg_q4_late_shipments, graph_jaccard_minhash, geo_distance_join,
-#     geo_nearest_landmark) queue for the r13 window.
-#
-# After r10: every key's latest driver row is r4+ and the
-# never-checked backlog is 0.  After r11: every row is r5+.  After
-# r12 (CORRECTNESS_r12.json: 49 full passes + 1 rows-only-by-design):
-# every row is r6+ and fn_variant/geo_grid_hotspots are
-# driver-certified.  After r13 (_R13_WINDOW below — ACTIVE this
-# round, first in the check order): every row is r7+
-# and 5 more r11 additions certify.  _R14_WINDOW was re-derived in
-# r12 (VERDICT r11 #3) so that ALL 25 round-11 additions certify by
-# r14: the 6 wave-3/4 keys join the 12 wave-2 TPC-H analogs at its
-# head, and the 3 round-13 additions (text_bpe_vocab_train,
-# ann_index_build, ann_index_search) lead it by the standing
-# never-checked-first rule; after r14 every row is r8+ and the
-# never-checked backlog is 0 again.  _R15_WINDOW (pre-staged)
-# resumes pure oldest-first rotation; after r15 every row is r9+.
-# _R16_WINDOW (pre-staged in r13) continues it; after r16 every row
-# is r10+.  _R17_WINDOW (pre-staged in r14, re-derived against
-# CORRECTNESS_r01–r13: the 38 remaining r10-vintage keys + 12 oldest
-# r11-vintage keys) continues to r11+; the r13 window keys (latest
-# row r13) fall back to registration order behind the staged windows.
-# ==================================================================
-_R9_WINDOW = (
-    # -- the 42 keys that have never had a driver CORRECTNESS row --
-    # embedding quality/eval keys
-    "embed_mmr_diverse", "embed_centroid_confusion",
-    "embed_silhouette_centroid", "embed_contamination_eval",
-    # train-prep long tail
-    "train_curriculum_schedule", "train_packing_efficiency",
-    "train_dataset_card",
-    # joins / aggregates long tail
-    "join_fuzzy_levenshtein", "agg_share_of_parent",
-    "agg_abc_classification", "agg_trimmed_mean",
-    "win_running_distinct", "sort_range_boundaries",
-    "agg_skyline_pareto",
-    # timeseries finance/behavioral wave (round-7 additions)
-    "ts_burst_hysteresis", "ts_rolling_median",
-    "ts_attribution_last_touch", "ts_sequence_regex_match",
-    "ts_markov_transitions", "trending_decayed_topk",
-    "ts_anomaly_mad", "ts_weighted_moving_avg", "ts_bollinger_bands",
-    "ts_rsi_wilder", "ts_drawdown_max", "ts_entropy_daily",
-    "ts_rolling_correlation", "ts_bounce_rate_daily",
-    "ts_new_vs_returning_daily", "ts_cohort_ltv", "ts_dow_hod_heatmap",
-    # text-analysis long tail
-    "text_lang_id_eval", "text_vocab_growth",
-    "text_readability_flesch", "text_zipf_fit",
-    "text_burstiness_dispersion", "text_js_divergence_langs",
-    # sampling / profiling long tail
-    "sample_stratified_neyman", "sample_balanced_classes",
-    "agg_gini_impurity", "agg_benford_digits", "agg_tukey_fences",
-    # -- the first 8 of the 16 r3-stale keys (freshness refresh) --
-    "fn_json", "fn_struct", "text_tf_idf", "inverted_index",
-    "profile_table", "sample_hash_stratified",
-    "sample_exact_k_stratified", "agg_mode_per_group",
-)
-
-assert len(_R9_WINDOW) == 50, len(_R9_WINDOW)
-
-# Pre-staged r10 window (VERDICT r8 "Next round" #6): the remaining 8
-# r3-stale keys, then the 42 oldest-r4 keys to fill 50.  After r10
-# every key's latest driver row is r4+ — from r11 on, normal
-# oldest-first freshness rotation resumes.
-_R10_WINDOW = (
-    # -- remaining 8 r3-stale keys --
-    "trending_topk_terms", "tweet_hashtag_topk", "win_session_paths",
-    "win_streak_longest", "ts_ewma", "ts_downsample_ohlc",
-    "text_bigram_familiarity", "text_scrub_denylist",
-    # -- 42 oldest-r4 keys (registration-order) --
-    "agg_global", "agg_count_distinct", "agg_having", "agg_rollup",
-    "agg_cube", "agg_grouping_sets", "agg_collect_sorted", "agg_pivot",
-    "agg_unpivot_melt", "agg_argmax_minby", "agg_q3_shipping",
-    "project_select", "filter_predicate", "filter_in_between_null",
-    "filter_regex", "distinct_rows",
-    "join_inner_equi", "join_outer_left", "join_outer_full",
-    "join_semi", "join_anti", "join_cross", "join_theta_range",
-    "join_interval_time", "join_asof_tolerance",
-    "set_union_all", "set_union_distinct",
-    "cdc_snapshot_diff", "scan_orc",
-    "pack_token_budget", "text_contamination_overlap",
-    "text_boilerplate_ngrams", "text_pii_scrub",
-    "sample_negative_pairs", "cluster_kmeans_lloyd",
-    "dedup_semantic_cluster", "text_gopher_quality",
-    "text_repetition_stats", "text_perplexity_unigram",
-    "dedup_incremental_snapshot", "knn_graph_topk", "embed_dim_stats",
-)
-
-assert len(_R10_WINDOW) == 50, len(_R10_WINDOW)
-assert not set(_R9_WINDOW) & set(_R10_WINDOW)
-
-# Pre-staged r11 window (VERDICT r9 "Next round" #5): oldest-first
-# freshness rotation.  7 keys whose latest driver row is r4, then the
-# 43 oldest r5-vintage keys; derived from CORRECTNESS_r01–r09.
-_R11_WINDOW = (
-    # -- latest driver row r4 --
-    "embed_matryoshka_truncate", "graph_triangle_count",
-    "train_shuffle_shard", "data_mixture_sample", "ann_recall_eval",
-    "table_time_travel", "train_pipeline_e2e",
-    # -- latest driver row r5 (load order) --
-    "win_rank_topk_per_group", "win_lag_lead_delta", "win_running_sum",
-    "win_range_frame", "win_ntile_pctrank_dist",
-    "ts_seasonal_decompose", "agg_kmv_distinct", "scan_csv_quarantine",
-    "stream_static_join", "stream_upsert_versioned",
-    "stream_stream_join_outer", "profile_join_skew", "graph_pagerank",
-    "graph_degree_distribution", "dedup_fuzzy_jaccard", "dedup_simhash",
-    "dedup_minhash_md5", "dedup_simhash_md5", "text_span_dedup",
-    "multimodal_audio_chunk", "scan_binary_files",
-    "sample_temperature_mixture", "table_compact_versioned",
-    "table_change_feed", "table_vacuum_versioned",
-    "sim_pairs_sharded_jobs", "join_bloom_prefilter",
-    "embed_pipeline_e2e",
-    "fn_string", "fn_date", "fn_math", "fn_conditional", "fn_array",
-    "fn_map", "fn_url", "fn_bitwise",
-    "udf_python_scalar", "udf_pandas_vectorized", "udaf_grouped_agg",
-    "udtf_table_fn",
-    "multimodal_bytes", "multimodal_decode_stub",
-    "multimodal_image_resize",
-)
-
-assert len(_R11_WINDOW) == 50, len(_R11_WINDOW)
-assert not set(_R10_WINDOW) & set(_R11_WINDOW)
-assert not set(_R9_WINDOW) & set(_R11_WINDOW)
-
-# Pre-staged r12 window (VERDICT r10 "Next round" #8 — unfreeze scope
-# decided in r11): the 2 keys added this round (never-checked, so they
-# lead and the backlog never re-grows), the 7 remaining r5-vintage
-# keys, then the 41 oldest r6-vintage keys in registration order.
-# Derived from CORRECTNESS_r01–r10 + the r11 window.
-_R12_WINDOW = (
-    # -- new this round (no driver row yet) --
-    "fn_variant", "geo_grid_hotspots",
-    # -- latest driver row r5 (registration order) --
-    "multimodal_decode_errors", "sim_pairs_threshold",
-    "embed_centroid_per_label", "sim_knn_join",
-    "agg_approx_count_distinct", "agg_weighted_median",
-    "join_asof_nearest",
-    # -- oldest 41 r6-vintage keys (registration order) --
-    "win_ntile_pctrank", "win_dedup_latest", "sort_multikey",
-    "limit_topk_global", "set_intersect", "set_except",
-    "join_skew_salted", "ts_tumbling_counts", "ts_sliding_counts",
-    "ts_sessionize_batch", "top_active_users", "error_rate_per_day",
-    "ts_gap_fill", "funnel_conversion", "ts_anomaly_zscore",
-    "ts_retention_cohort", "ts_interpolate", "text_tokenize",
-    "text_ngrams", "text_sentiment_lexicon", "text_lang_stats",
-    "text_quality_score", "text_lang_id", "text_fingerprint",
-    "text_token_count_bpe", "text_keywords_topk",
-    "agg_bitmap_distinct", "agg_kmv_union_intersect",
-    "ts_sliding_distinct_kmv", "scan_parquet", "scan_json_lines",
-    "sink_parquet", "scan_csv", "sink_json_lines",
-    "source_stream_file", "source_stream_rate",
-    "sink_stream_foreachbatch", "stream_tumbling_agg",
-    "stream_sliding_agg", "stream_session_window", "stream_dedup",
-)
-
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-assert not set(_R12_WINDOW) & (set(_R11_WINDOW) | set(_R10_WINDOW))
-
-# Pre-staged r13 window: the 5 r11 additions registered after the
-# staged windows (never-checked — they lead so the backlog never
-# re-grows), the 9 remaining r6-vintage keys, then the 36 oldest
-# r7-vintage keys in registration order.  Derived from
-# CORRECTNESS_r01–r10 + the r11/r12 windows.  After r13 every key's
-# latest driver row is r7+ and every key registered before round 11
-# wave 2 is driver-certified.
-_R13_WINDOW = (
-    # -- new in r12 (no driver row yet — new keys lead) --
-    "agg_q16_supplier_cnt", "agg_q20_excess_suppliers",
-    "text_bpe_pair_topk",
-    # -- new in r11 with no driver row yet --
-    "graph_jaccard_minhash", "geo_distance_join", "geo_nearest_landmark",
-    "agg_q6_forecast_revenue", "agg_q4_late_shipments",
-    # -- latest driver row r6 (registration order) --
-    "stream_late_data", "stream_stateful_running", "stream_stream_join",
-    "join_pit_scd2", "agg_percentiles", "agg_ratio_wilson_ci",
-    "join_bucketed_colocated", "graph_also_bought_topk",
-    "table_clone_shallow",
-    # -- oldest 36 r7-vintage keys (registration order) --
-    "ts_funnel_sequence", "sim_pairs_bucketed", "multimodal_frame_sample",
-    "dedup_components", "sim_ivf_topk", "dedup_embedding",
-    "agg_hll_sketch", "sample_weighted_pps", "agg_heavy_hitters_cms",
-    "scan_schema_evolution", "scan_text_lines", "stream_topk_per_window",
-    "stream_checkpoint_resume", "stream_transform_with_state",
-    "merge_upsert", "cdc_scd2_intervals", "agg_approx_percentile",
-    "agg_histogram", "agg_percentile_binned", "sink_partitioned_parquet",
-    "sink_compact_small_files", "sink_sorted_clustered",
-    "sink_zorder_clustered", "scan_manifest_pruned",
-    "embed_quantize_int8", "graph_khop_reach", "doc_pipeline_e2e",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_containment",
-    "embed_pca_project", "sim_pairs_bucket_jobs",
-    "agg_regression_per_group",
-    # (ts_autocorr_lag / ts_holt_linear / ts_changepoint_cusum
-    # displaced to _R14_WINDOW by the three r12 additions above —
-    # still r7-vintage-first there.  A fourth r12 key,
-    # dedup_jaccard_prefix, was built, probed, and REJECTED — see
-    # BASELINE.md "Round-12 negative result".)
-)
-
-assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-assert not set(_R13_WINDOW) & (set(_R12_WINDOW) | set(_R11_WINDOW))
-
-# Pre-staged r14 window (re-derived in r12 per VERDICT r11 "Next
-# round" #3 — compress the certification backlog so ALL 25 round-11
-# additions have a driver row by r14): the 6 round-11 wave-3/4 keys
-# (geohash, pathlength, adamic-adar, PMI, multi-clause MERGE,
-# bootstrap CI) now lead alongside the 12 wave-2 TPC-H analogs
-# (never-checked keys lead by the standing rule), then the 8
-# remaining r7-vintage keys and the 24 oldest r8-vintage keys in
-# registration order.  The 6 r8-vintage keys this displaced
-# (multimodal_audio_zcr, table_analyze_stats, table_restore_version,
-# table_schema_evolution_versioned, ts_mann_kendall, ts_theil_sen)
-# lead _R15_WINDOW instead — their rows stay r8 through r14, so the
-# "after r14 every row is r8+" promise still holds.  Derived from
-# CORRECTNESS_r01–r11 + the r12/r13 windows.
-_R14_WINDOW = (
-    # -- new in r13 (no driver row yet — new keys lead; the r13
-    #    cascade displaced graph_assoc_rules_lift /
-    #    graph_clustering_coeff / graph_powerlaw_slope to _R15_WINDOW,
-    #    whose own tail displaced ts_rsi_wilder / ts_drawdown_max /
-    #    ts_entropy_daily to the _R16_WINDOW head; every displaced
-    #    key's row stays inside the 6-round freshness horizon) --
-    "text_bpe_vocab_train", "ann_index_build", "ann_index_search",
-    # -- new in r11 waves 3/4 (no driver row yet) --
-    "geo_geohash_encode", "geo_user_pathlength", "graph_adamic_adar",
-    "text_cooccurrence_pmi", "cdc_merge_multi_clause",
-    "sample_bootstrap_ci",
-    # -- new in r11 wave 2 (no driver row yet) --
-    "agg_q12_priority_class", "agg_q13_custdist", "agg_q14_promo_share",
-    "agg_q15_top_supplier", "agg_q17_small_qty_revenue",
-    "agg_q19_disjunctive_revenue", "agg_q2_min_cost_supplier",
-    "agg_q8_market_share", "agg_q9_product_profit",
-    "agg_q11_important_parts", "agg_q21_waiting_supplier",
-    "agg_q22_dormant_customers",
-    # -- latest driver row r7 (registration order; the last two are
-    #    the r12-cascade displacements from _R13_WINDOW) --
-    "ts_forecast_backtest", "embed_pca_power_exact",
-    "table_deletion_vectors", "text_chunk_sliding", "embed_chunk_pool",
-    "multimodal_jpeg_decode", "sim_cosine_topk", "sim_batch_queries_topk",
-    "ts_autocorr_lag", "ts_holt_linear", "ts_changepoint_cusum",
-    # -- oldest 30 r8-vintage keys (registration order) --
-    "agg_q1_pricing", "agg_stats", "join_broadcast", "join_asof",
-    "join_star_3way", "join_range_binned", "stream_quarantine_split",
-    "stream_backfill_union", "stream_distinct_users_window",
-    "cdc_debezium_apply", "scan_bloom_pruned", "scan_partition_evolution",
-    "embed_binary_quantize", "graph_label_propagation", "graph_kcore_peel",
-    "graph_jaccard_neighbors", "graph_random_walk_deterministic",
-    "graph_hits_topk",
-    # (dedup_lsh_recall_eval / multimodal_audio_vad /
-    # graph_modularity_eval displaced to _R15_WINDOW by the r12
-    # cascade, graph_assoc_rules_lift / graph_clustering_coeff /
-    # graph_powerlaw_slope by the r13 cascade — their r8 rows stay
-    # inside the freshness horizon either way.)
-)
-
-assert len(_R14_WINDOW) == 50, len(_R14_WINDOW)
-assert not set(_R14_WINDOW) & (
-    set(_R13_WINDOW) | set(_R12_WINDOW) | set(_R11_WINDOW)
-)
-
-# Pre-staged r15 window (VERDICT r11 "Next round" #7): pure
-# oldest-first freshness rotation — no never-checked keys remain once
-# r14 runs (the backlog is 0 after r14 by construction).  The 6
-# r8-vintage keys displaced from _R14_WINDOW lead, then the remaining
-# 26 r8-vintage keys and the 18 oldest r9-vintage keys in
-# registration order.  Derived from CORRECTNESS_r01–r11 + the
-# r12/r13/r14 windows.  After r15 every key's latest driver row is
-# r9+ and 132 keys (32 r9-vintage + 50 r10 + 50 r11) remain for the
-# r16–r17 rotation — comfortably inside the 6-round horizon.
-_R15_WINDOW = (
-    # -- new in r14 (no driver row yet — new keys lead; the r14
-    #    cascade displaced ts_bollinger_bands to the _R16_WINDOW
-    #    head, text_scrub_denylist to the _R17_WINDOW head, and
-    #    profile_join_skew out of the staged windows — its r11 row is
-    #    6 rounds old at r17 close, refreshed first thing in r18) --
-    "text_bpe_vocab_train_batched",
-    # -- displaced from r14 (latest driver row r8; the last three by
-    #    the r13 cascade) --
-    "multimodal_audio_zcr", "table_analyze_stats",
-    "table_restore_version", "table_schema_evolution_versioned",
-    "ts_mann_kendall", "ts_theil_sen",
-    "graph_assoc_rules_lift", "graph_clustering_coeff",
-    "graph_powerlaw_slope",
-    # -- remaining r8-vintage keys (registration order) --
-    "ts_holt_winters", "ab_test_proportions", "ts_cross_correlation",
-    "agg_covariance_matrix", "ts_survival_km", "ts_anova_hour_of_day",
-    "agg_chi2_independence", "agg_gini_coefficient",
-    "agg_mann_whitney_u", "agg_ks_two_sample", "agg_welch_ttest",
-    "agg_hhi_concentration", "agg_runs_test", "agg_spearman_rank_corr",
-    "agg_hill_tail_index", "agg_lorenz_curve", "multimodal_image_phash",
-    "dedup_image_phash", "multimodal_image_histogram",
-    "embed_pq_adc_topk", "embed_ivfpq_topk", "multimodal_image_tiles",
-    "agg_q5_local_supplier", "agg_q18_large_orders",
-    "agg_q7_nation_volume", "agg_q10_returned_topk",
-    "dedup_lsh_recall_eval", "multimodal_audio_vad",
-    "graph_modularity_eval",
-    # -- oldest 18 r9-vintage keys (registration order) --
-    "win_running_distinct", "sort_range_boundaries",
-    "agg_skyline_pareto", "ts_burst_hysteresis", "ts_rolling_median",
-    "ts_attribution_last_touch", "ts_sequence_regex_match",
-    "ts_markov_transitions", "trending_decayed_topk", "ts_anomaly_mad",
-    "ts_weighted_moving_avg",
-    # (ts_rolling_correlation / ts_bounce_rate_daily /
-    # ts_new_vs_returning_daily displaced to the r16 rotation head by
-    # the r12 cascade, ts_rsi_wilder / ts_drawdown_max /
-    # ts_entropy_daily by the r13 cascade, ts_bollinger_bands by the
-    # r14 cascade: at r15 close their r9 rows are exactly 6 rounds
-    # old — on the horizon, refreshed first thing in r16.)
-)
-
-assert len(_R15_WINDOW) == 50, len(_R15_WINDOW)
-assert not set(_R15_WINDOW) & (
-    set(_R14_WINDOW) | set(_R13_WINDOW) | set(_R12_WINDOW)
-)
-
-# Pre-staged r16 window (derived in r13 per VERDICT r12 "Next round"
-# #3): pure oldest-first rotation.  After r15 the oldest remaining
-# rows are r9-vintage — the 3 keys displaced to the r16 head by the
-# r12 cascade lead, then the remaining 32 r9-vintage keys and the 15
-# oldest r10-vintage keys, all in registration order.  Derived from
-# CORRECTNESS_r01–r12 + the r13/r14/r15 windows.  After r16 every
-# key's latest driver row is r10+ (35 r10 + 50 r11 + 50 r12 keys
-# remain for r17+ — inside the ~6.8-round full-refresh horizon).
-_R16_WINDOW = (
-    # -- displaced to the r16 head by the r12/r13/r14 cascades (r9
-    #    rows) --
-    "ts_rolling_correlation", "ts_bounce_rate_daily",
-    "ts_new_vs_returning_daily",
-    "ts_rsi_wilder", "ts_drawdown_max", "ts_entropy_daily",
-    "ts_bollinger_bands",
-    # -- remaining r9-vintage keys (registration order) --
-    "ts_cohort_ltv", "ts_dow_hod_heatmap", "text_tf_idf",
-    "text_lang_id_eval", "text_vocab_growth", "text_readability_flesch",
-    "text_zipf_fit", "text_burstiness_dispersion",
-    "text_js_divergence_langs", "sample_hash_stratified",
-    "sample_exact_k_stratified", "sample_stratified_neyman",
-    "sample_balanced_classes", "profile_table", "agg_mode_per_group",
-    "agg_gini_impurity", "agg_benford_digits", "agg_tukey_fences",
-    "inverted_index", "train_packing_efficiency", "train_dataset_card",
-    "train_curriculum_schedule", "embed_contamination_eval",
-    "embed_mmr_diverse", "fn_json", "fn_struct",
-    "embed_centroid_confusion", "embed_silhouette_centroid",
-    "agg_share_of_parent", "agg_abc_classification", "agg_trimmed_mean",
-    "join_fuzzy_levenshtein",
-    # -- oldest 12 r10-vintage keys (registration order) --
-    "set_union_all", "set_union_distinct", "trending_topk_terms",
-    "win_session_paths", "ts_ewma", "ts_downsample_ohlc",
-    "win_streak_longest", "text_bigram_familiarity",
-    "tweet_hashtag_topk", "scan_orc", "cdc_snapshot_diff",
-    # (pack_token_budget / text_contamination_overlap /
-    # text_boilerplate_ngrams fall to the r17 rotation head via the
-    # r13 cascade, text_scrub_denylist via the r14 cascade — their
-    # r10 rows are 6 rounds old at r16 close, refreshed first thing
-    # in r17.)
-)
-
-assert len(_R16_WINDOW) == 50, len(_R16_WINDOW)
-assert not set(_R16_WINDOW) & (
-    set(_R15_WINDOW) | set(_R14_WINDOW) | set(_R13_WINDOW)
-)
-
-# Pre-staged r17 window (derived in r14 per VERDICT r13 "Next round"
-# #6, against actual CORRECTNESS_r01–r13 history): pure oldest-first
-# rotation.  After r16 the oldest remaining rows are the 38 r10-vintage
-# keys below (the 3 keys displaced to the r17 head by the r13 cascade
-# lead: pack_token_budget / text_contamination_overlap /
-# text_boilerplate_ngrams — their r10 rows are 6 rounds old at r16
-# close), then the 12 oldest r11-vintage keys, all in the registry's
-# post-window registration order.  After r17 every key's latest driver
-# row is r11+ (38 r11 + 50 r12 + 50 r13 + 50 r14 keys remain for r18+
-# — inside the ~6.8-round full-refresh horizon).
-_R17_WINDOW = (
-    # -- displaced to the r17 head by the r13/r14 cascades (r10 rows) --
-    "pack_token_budget", "text_contamination_overlap",
-    "text_boilerplate_ngrams", "text_scrub_denylist",
-    # -- remaining r10-vintage keys (registration order) --
-    "text_pii_scrub", "sample_negative_pairs", "cluster_kmeans_lloyd",
-    "dedup_semantic_cluster", "text_gopher_quality",
-    "text_repetition_stats", "text_perplexity_unigram",
-    "dedup_incremental_snapshot", "knn_graph_topk", "embed_dim_stats",
-    "agg_global", "agg_count_distinct", "agg_having", "agg_rollup",
-    "agg_cube", "agg_grouping_sets", "agg_collect_sorted", "agg_pivot",
-    "agg_unpivot_melt", "agg_argmax_minby", "agg_q3_shipping",
-    "project_select", "filter_predicate", "filter_in_between_null",
-    "filter_regex", "distinct_rows", "join_inner_equi",
-    "join_outer_left", "join_outer_full", "join_semi", "join_anti",
-    "join_cross", "join_theta_range", "join_interval_time",
-    "join_asof_tolerance",
-    # -- oldest 12 r11-vintage keys (registration order) --
-    "win_rank_topk_per_group", "win_lag_lead_delta", "win_running_sum",
-    "win_range_frame", "win_ntile_pctrank_dist", "ts_seasonal_decompose",
-    "agg_kmv_distinct", "scan_csv_quarantine", "stream_static_join",
-    "stream_upsert_versioned", "stream_stream_join_outer",
-    # (profile_join_skew displaced out of the staged windows by the
-    # r14 cascade — its r11 row is 6 rounds old at r17 close,
-    # refreshed first thing in r18.)
-)
-
-assert len(_R17_WINDOW) == 50, len(_R17_WINDOW)
-assert not set(_R17_WINDOW) & (
-    set(_R16_WINDOW) | set(_R15_WINDOW) | set(_R14_WINDOW)
-)
 
 def query(
     name: str,
@@ -512,111 +58,58 @@ def query(
 def load_all_operators() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration).
 
-    Imports only POPULATE the registry; the explicit ``_R14_WINDOW``
-    tuple above defines the check-order prefix the driver evaluates
-    (the harness checks the first 50 ``queries()`` keys per round),
-    with the pre-staged ``_R15_WINDOW``/``_R16_WINDOW``/``_R17_WINDOW``
-    queued directly behind it.  Keys outside the staged windows
-    (including the r11/r12/r13 windows, certified in
-    CORRECTNESS_r11/r12/r13.json) follow in registration order.
+    Returns the registry in registration order, i.e. the import order
+    below; ``__spark_entry__.check_order`` uses it to break ties.
     """
     from .operators import windows  # noqa: F401
     from .operators import sort_limit  # noqa: F401
     from .operators import setops  # noqa: F401
-    from .operators import skew  # noqa: F401  (new this round)
+    from .operators import skew  # noqa: F401
     from .operators import timeseries  # noqa: F401
     from .text import analysis  # noqa: F401
-    from .llm import bucketed  # noqa: F401  (new this round)
-    from .llm import frames  # noqa: F401  (new this round)
-    from .llm import components, ivf  # noqa: F401  (new this round)
-    from .llm import embdedup  # noqa: F401  (new this round)
-    from .operators import scale_ops  # noqa: F401  (new this round)
-    from .sources import formats  # noqa: F401  (new this round)
+    from .llm import bucketed  # noqa: F401
+    from .llm import frames  # noqa: F401
+    from .llm import components, ivf  # noqa: F401
+    from .llm import embdedup  # noqa: F401
+    from .operators import scale_ops  # noqa: F401
+    from .sources import formats  # noqa: F401
     from .sources import scans  # noqa: F401
     from .streaming import ops  # noqa: F401
-
-    # Round-2 batch 2 (registered after the keys above so they queue
-    # behind the 50 operators still awaiting their first driver row).
-    from .operators import cdc, profiling  # noqa: F401  (new this round)
-    from .sources import layout  # noqa: F401  (new this round)
-    from .text import indexing  # noqa: F401  (new this round)
-    from .llm import quantize  # noqa: F401  (new this round)
-    from .operators import graph  # noqa: F401  (new this round)
-    from .text import pipeline  # noqa: F401  (new this round)
-    from .llm import containment  # noqa: F401  (new this round)
-    from .llm import curation, kmeans, semdedup  # noqa: F401  (round 3)
-    from .llm import pca  # noqa: F401  (round 3)
-    from .llm import audio  # noqa: F401  (new this round)
-    from .sources import binaryfiles  # noqa: F401  (new this round)
-
-    # Round-4 additions (first driver rows landed in round 4).
-    from .text import quality_rules  # noqa: F401  (round 4)
-    from .llm import incremental, knngraph, sharding  # noqa: F401  (round 4)
-    from .llm import recall  # noqa: F401  (round 4)
-    from .sources import versioned  # noqa: F401  (round 4)
-    from .llm import trainprep  # noqa: F401  (round 4)
-
-    # Round-5 additions (queue behind the explicit window).
-    from .llm import orchestration  # noqa: F401  (round 5)
-    from .operators import bloomjoin  # noqa: F401  (round 5)
-    from .llm import embpipeline  # noqa: F401  (round 5)
-
-    # Round-6 additions (queue behind the explicit window).
-    from .llm import bucketjobs  # noqa: F401  (round 6)
-    from .operators import statistics  # noqa: F401  (round 6)
-    from .llm import pcapower  # noqa: F401  (round 6)
-    from .sources import deletionvectors  # noqa: F401  (round 6)
-
-    # Round-7 additions (chunking pair is window-listed; the rest
-    # queue behind the window for their first driver rows in round 8).
-    # Round-11 additions (window-listed in _R12_WINDOW for their first
-    # driver rows): Spark 4 Variant path + geo grid binning.
-    from .operators import geo  # noqa: F401  (round 11)
-
-    from .text import chunking  # noqa: F401  (round 7)
-    from .llm import phash  # noqa: F401  (round 7)
-    from .llm import mmr  # noqa: F401  (round 7)
-    from .llm import pq  # noqa: F401  (round 7)
-    from .llm import ivfpq  # noqa: F401  (round 7)
-    from .llm import tiles  # noqa: F401  (round 7)
-    # (quantize/timeseries round-7 keys register via their family imports)
-
-    # Round-11 wave 2: the twelve remaining TPC-H analog shapes.
-    # Registered after every staged window so they queue for their
-    # first driver rows in the r14 window.
-    from .operators import tpch  # noqa: F401  (round 11)
-
-    # Round-13 additions (window-listed at the head of _R14_WINDOW for
-    # their first driver rows): the ANN build/serve split.  The third
-    # r13 key, text_bpe_vocab_train, registers via text.analysis above.
-    from .llm import annindex  # noqa: F401  (round 13)
-
-    # Families fully hash-verified by the round-1 driver run; scalars
-    # lead because fn_map's oracle was strengthened this round.
+    from .operators import cdc, profiling  # noqa: F401
+    from .sources import layout  # noqa: F401
+    from .text import indexing  # noqa: F401
+    from .llm import quantize  # noqa: F401
+    from .operators import graph  # noqa: F401
+    from .text import pipeline  # noqa: F401
+    from .llm import containment  # noqa: F401
+    from .llm import curation, kmeans, semdedup  # noqa: F401
+    from .llm import pca  # noqa: F401
+    from .llm import audio  # noqa: F401
+    from .sources import binaryfiles  # noqa: F401
+    from .text import quality_rules  # noqa: F401
+    from .llm import incremental, knngraph, sharding  # noqa: F401
+    from .llm import recall  # noqa: F401
+    from .sources import versioned  # noqa: F401
+    from .llm import trainprep  # noqa: F401
+    from .llm import orchestration  # noqa: F401
+    from .operators import bloomjoin  # noqa: F401
+    from .llm import embpipeline  # noqa: F401
+    from .llm import bucketjobs  # noqa: F401
+    from .operators import statistics  # noqa: F401
+    from .llm import pcapower  # noqa: F401
+    from .sources import deletionvectors  # noqa: F401
+    from .operators import geo  # noqa: F401
+    from .text import chunking  # noqa: F401
+    from .llm import phash  # noqa: F401
+    from .llm import mmr  # noqa: F401
+    from .llm import pq  # noqa: F401
+    from .llm import ivfpq  # noqa: F401
+    from .llm import tiles  # noqa: F401
+    from .operators import tpch  # noqa: F401
+    from .llm import annindex  # noqa: F401
     from .functions import scalars  # noqa: F401
     from . import udfs  # noqa: F401
     from .llm import dedup, multimodal, similarity  # noqa: F401
     from .operators import aggregates, filters, joins  # noqa: F401
-
-    # Final check order: the explicit 50-key r14 window first (what
-    # the driver certifies this round), the pre-staged r15/r16/r17
-    # windows next, then every remaining key (including the r11-,
-    # r12- and r13-certified windows) in registration order.
-    missing = [
-        k
-        for k in (*_R14_WINDOW, *_R15_WINDOW, *_R16_WINDOW, *_R17_WINDOW)
-        if k not in REGISTRY
-    ]
-    if missing:
-        raise RuntimeError(
-            f"window names unregistered operator keys: {missing}; "
-            "a window key was renamed or its module was dropped"
-        )
-    ordered: dict[str, QuerySpec] = {}
-    for key in (*_R14_WINDOW, *_R15_WINDOW, *_R16_WINDOW, *_R17_WINDOW):
-        ordered[key] = REGISTRY.pop(key)
-    ordered.update(REGISTRY)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
 
     return REGISTRY

@@ -8,7 +8,7 @@ sweep (tools/degen_audit.py) found ten such keys; each now returns
 NULL (or a degenerate-but-defined value) with the guard mirrored in
 its DuckDB oracle.  This suite keeps exactly those ten crash-free on
 the shared constant-domain fixture — the registry-wide version runs
-via ``python tools/degen_audit.py`` (artifact DEGEN_AUDIT_r10.txt).
+via ``python tools/degen_audit.py`` (artifact DEGEN_AUDIT_r15.txt).
 """
 
 from __future__ import annotations

@@ -5,21 +5,17 @@ driver/judge reads."""
 
 from __future__ import annotations
 
+import glob
+import json
 import re
 
 from bigdata_twitter_spark.registry import load_all_operators
+from bigdata_twitter_spark.tables import TABLE_NAMES
 
 SPECS = load_all_operators()
 
 # Keys whose inputs are generated fixtures/streams, not sf tables.
-_NO_TABLE_OK = {
-    k for k, s in SPECS.items() if not s.tables
-}
-
-_TABLE_NAMES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+_NO_TABLE_OK = {k for k, s in SPECS.items() if not s.tables}
 
 
 def test_every_key_has_scale_note():
@@ -37,7 +33,7 @@ def test_declared_tables_are_real():
         (k, t)
         for k, s in SPECS.items()
         for t in s.tables
-        if t not in _TABLE_NAMES
+        if t not in TABLE_NAMES
     ]
     assert not bad, bad
 
@@ -59,37 +55,41 @@ def test_oracle_sql_mentions_declared_tables():
 def test_fixture_keys_are_the_known_set():
     """Keys with no sf tables must be the declared fixture/stream set
     — additions here need an explicit decision, not an accident."""
-    assert _NO_TABLE_OK == {
-        k for k, s in SPECS.items() if not s.tables
-    }
     for k in _NO_TABLE_OK:
+        text = (SPECS[k].doc + SPECS[k].scale_note).lower()
         assert (
             "fixture" in SPECS[k].scale_note.lower()
-            or "binfixtures" in (SPECS[k].doc + SPECS[k].scale_note).lower()
-            or k in ("source_stream_rate",)
-            or "png" in (SPECS[k].doc + SPECS[k].scale_note).lower()
-            or "wav" in (SPECS[k].doc + SPECS[k].scale_note).lower()
-            or "jpeg" in (SPECS[k].doc + SPECS[k].scale_note).lower()
-            or "jfif" in (SPECS[k].doc + SPECS[k].scale_note).lower()
-            or "image" in (SPECS[k].doc + SPECS[k].scale_note).lower()
+            or k == "source_stream_rate"
+            or any(
+                w in text
+                for w in ("binfixtures", "png", "wav", "jpeg", "jfif", "image")
+            )
         ), k
 
 
-def test_driver_check_order_leads_with_active_window():
-    """The driver certifies exactly the FIRST 50 queries() keys per
-    round; the active window tuple must lead the registry order with
-    the pre-staged next window immediately behind it — a refactor
-    that reorders imports must not silently change what gets
-    certified."""
-    from bigdata_twitter_spark.registry import (
-        _R14_WINDOW,
-        _R15_WINDOW,
-        _R16_WINDOW,
-        _R17_WINDOW,
-    )
+def test_check_order_puts_least_recently_checked_first(tmp_path):
+    """Never-checked keys lead, then the oldest latest row; ties keep
+    the given order."""
+    from __spark_entry__ import check_order
 
-    keys = list(SPECS)
-    assert keys[:50] == list(_R14_WINDOW)
-    assert keys[50:100] == list(_R15_WINDOW)
-    assert keys[100:150] == list(_R16_WINDOW)
-    assert keys[150:200] == list(_R17_WINDOW)
+    (tmp_path / "CORRECTNESS_r1.json").write_text('{"b": {}, "d": {}}')
+    (tmp_path / "CORRECTNESS_r2.json").write_text('{"a": {}}')
+    assert check_order("abcd", repo=str(tmp_path)) == list("cbda")
+
+
+def test_driver_sample_is_least_recently_checked():
+    """The driver checks the first 50 ``queries()`` keys; none may have
+    a newer CORRECTNESS row than a key behind them, so the sample
+    rotates through every key."""
+    import __spark_entry__ as entrymod
+
+    def rnd(path):
+        return int(re.search(r"_r(\d+)\.json$", path)[1])
+
+    latest: dict[str, int] = {}
+    paths = glob.glob(f"{entrymod.HERE}/CORRECTNESS_r*.json")
+    for path in sorted(paths, key=rnd):
+        with open(path) as f:
+            latest.update(dict.fromkeys(json.load(f), rnd(path)))
+    rounds = [latest.get(k, 0) for k in entrymod.queries()]
+    assert max(rounds[:50]) <= min(rounds[50:])

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Driver-sim oracle spot-check for SELECTED keys (the verify skill's
-harness, scoped): plain SparkSession, repr-strict multiset compare vs
-DuckDB at one or more SF dirs.
+"""Driver-sim oracle check: plain SparkSession, the ``entry(spark)``
+smoke call, then a repr-strict multiset compare vs DuckDB at one or
+more SF dirs for the given keys (default: every ``queries()`` key).
 
 Usage::
 
-    TZ=UTC python tools/verify_keys.py key [key ...]
+    TZ=UTC python tools/verify_keys.py [key ...]
     TZ=UTC SPARK_GRAFT_VERIFY_SFS=sf0.001,sf0.01 python tools/verify_keys.py ...
 
 Keys without declared oracle SQL are executed (must not raise, must
@@ -22,11 +22,20 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def norm(df) -> Counter:
+    """Row multiset with every cell compared by ``repr``."""
+    c = Counter()
+    cols = sorted(df.columns)
+    for r in df[cols].itertuples(index=False, name=None):
+        c[tuple(repr(x) for x in r)] += 1
+    return c
+
+
 def main() -> None:
-    keys = sys.argv[1:]
     sfs = os.environ.get("SPARK_GRAFT_VERIFY_SFS", "sf0.001,sf0.01").split(",")
-    import duckdb
     from pyspark.sql import SparkSession
+
+    from tests.parity import duckdb_connect
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -36,33 +45,19 @@ def main() -> None:
     )
     import __spark_entry__ as m
 
+    assert len(m.entry(spark).collect()) > 0, "entry(spark) returned no rows"
     qs, osql = m.queries(), m.oracle_sql()
+    keys = sys.argv[1:] or list(qs)
     fail = []
     for sf_tag in sfs:
         sf = f"/root/testdata/{sf_tag}"
-        con = duckdb.connect()
-        for t in [
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ]:
-            con.sql(
-                f"CREATE VIEW {t} AS"
-                f" SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-            )
+        con = duckdb_connect(sf)
         for k in keys:
             sdf = qs[k](spark, sf).toPandas()
             if k not in osql:
                 print(f"{sf_tag} {k}: ran, {len(sdf)} rows (no oracle)")
                 continue
             odf = con.sql(osql[k]).df()
-
-            def norm(df):
-                c = Counter()
-                cols = sorted(df.columns)
-                for r in df[cols].itertuples(index=False, name=None):
-                    c[tuple(repr(x) for x in r)] += 1
-                return c
-
             ok = sorted(sdf.columns) == sorted(odf.columns) and norm(
                 sdf
             ) == norm(odf)
