@@ -35,15 +35,12 @@ declared exact-oracle intent, exactly like ``dedup_embedding``'s guard.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..registry import query
 from ..tables import load, persist_fresh, spread
 from .bucketed import (
@@ -56,7 +53,6 @@ from .bucketed import (
     bits_for,
 )
 from .embdedup import EXPECT_EXACT_ORACLE_ENV, ExactOracleRegimeExceeded
-from .orchestration import _atexit_reclaim, reclaim_runs
 from .vectors import DIMS, PAIR_COSINE_THRESHOLD, duck_cosine
 
 BUCKET_JOB_SHARDS = 4  # S — same default as orchestration.N_SHARDS
@@ -66,19 +62,6 @@ BUCKET_JOB_SHARDS = 4  # S — same default as orchestration.N_SHARDS
 # harness scale (sf0.1 = 5000 vectors → r = 5) with headroom.  Past it
 # the operator is bench-only (regime guard below).
 ORACLE_BITS_MAX = 6
-
-_RUN_BASE = os.path.join(tempfile.gettempdir(), "bdt_spark_bucketjobs")
-
-# Run dirs created by THIS process, reclaimed at the next invocation;
-# FRESH foreign run dirs are never touched (see orchestration.py —
-# rmtree of the shared base destroys a concurrent process's in-flight
-# job commit), but day-old ones are GC'd as crash leftovers and the
-# atexit hook removes this process's final dir on normal exit.  The
-# latest run dir is exposed for tests.
-_MY_RUNS: list[str] = []
-LAST_RUN_DIR: str = ""
-
-atexit.register(_atexit_reclaim, _MY_RUNS)
 
 # Job-loop audit of the most recent run (the "no silent caps" rule —
 # VERDICT r4/r5): how many jobs COULD have run under mod-sharding,
@@ -251,12 +234,7 @@ def _oracle_plane_rows() -> str:
 def sim_pairs_bucket_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding pairs with cosine ≥ 0.4 mined as a loop of per-bucket-
     shard jobs; cross-shard jobs are provably empty and never run."""
-    global LAST_RUN_DIR
-    reclaim_runs(_MY_RUNS, _RUN_BASE)
-    run_dir = os.path.join(_RUN_BASE, uuid.uuid4().hex[:12])
-    os.makedirs(run_dir, exist_ok=True)
-    _MY_RUNS.append(run_dir)
-    LAST_RUN_DIR = run_dir
+    run_dir = scratch.fresh("bucketjobs")
     job_dirs = run_bucket_jobs(spark, sf_dir, run_dir, BUCKET_JOB_SHARDS)
     if not job_dirs:
         return spark.createDataFrame(

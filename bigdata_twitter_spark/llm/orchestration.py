@@ -32,69 +32,17 @@ hash-grade rather than a recall contract.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..registry import query
 from ..tables import load
 from .vectors import PAIR_COSINE_THRESHOLD, duck_cosine
 
 N_SHARDS = 4
-
-_RUN_BASE = os.path.join(tempfile.gettempdir(), "bdt_spark_shardjobs")
-
-# Run dirs created by THIS process, reclaimed at the next invocation.
-# Foreign processes' run dirs are never touched: rmtree of the shared
-# base while another harness process is mid-write destroys its
-# in-flight job commit (observed: a concurrent oracle sweep lost its
-# ``_temporary/0`` staging dir mid-job) — the annindex/versioned
-# discipline applies here too: never delete a path another writer can
-# name.  The latest run dir is exposed for tests.
-_MY_RUNS: list[str] = []
-LAST_RUN_DIR: str = ""
-
-# Foreign run dirs this old are crash leftovers, not live writers: a
-# run completes in seconds-to-minutes and the atexit hook below removes
-# a process's own dirs on normal exit, so anything day-old under the
-# shared base is dead weight (parquet handoffs can be large — ADVICE
-# r14 flagged the unbounded growth the process-local reclaim left).
-_STALE_RUN_AGE_S = 24 * 3600
-
-
-def reclaim_runs(my_runs: list[str], base: str) -> None:
-    """Reclaim THIS process's previous run dirs, then GC foreign run
-    dirs whose mtime is older than ``_STALE_RUN_AGE_S``.  Fresh foreign
-    dirs are never touched — rmtree of a concurrent process's in-flight
-    job commit destroys its ``_temporary`` staging (the r14 incident)."""
-    while my_runs:
-        shutil.rmtree(my_runs.pop(), ignore_errors=True)
-    try:
-        cutoff = time.time() - _STALE_RUN_AGE_S
-        for d in os.listdir(base):
-            p = os.path.join(base, d)
-            try:
-                if os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-    except OSError:
-        pass
-
-
-def _atexit_reclaim(my_runs: list[str]) -> None:
-    for d in my_runs:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_atexit_reclaim, _MY_RUNS)
-
 
 def _self_dot() -> F.Column:
     return F.expr(
@@ -181,15 +129,8 @@ def run_shard_jobs(spark: SparkSession, sf_dir: str, run_dir: str) -> None:
 def sim_pairs_sharded_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine-≥τ pairs via a loop of shard-pair jobs (blocked
     all-pairs, parquet handoff); union of jobs ≡ the all-pairs answer."""
-    # THIS process's previous handoff dirs are dead state — reclaim
-    # them (same one-invocation cache bound as graph_triangle_count);
-    # fresh foreign run dirs may be mid-write and are left alone, but
-    # day-old ones are crash leftovers and are GC'd.
-    global LAST_RUN_DIR
-    reclaim_runs(_MY_RUNS, _RUN_BASE)
-    run_dir = os.path.join(_RUN_BASE, uuid.uuid4().hex[:12])
-    os.makedirs(run_dir, exist_ok=True)
-    _MY_RUNS.append(run_dir)
-    LAST_RUN_DIR = run_dir
+    # The previous call's handoff dirs are dead state: fresh() reclaims
+    # them (same one-invocation cache bound as graph_triangle_count).
+    run_dir = scratch.fresh("shardjobs")
     run_shard_jobs(spark, sf_dir, run_dir)
     return spark.read.parquet(os.path.join(run_dir, "job_*_*"))

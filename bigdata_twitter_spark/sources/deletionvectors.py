@@ -30,9 +30,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..registry import query
 from ..tables import load
-from .layout import _layout_dir
 
 DV_DELETE_MOD = 7
 DV_DELETE_RESIDUE = 3
@@ -69,9 +69,9 @@ def table_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE WHERE event_id % 7 == 3 as a positional deletion-vector
     sidecar over an untouched base table; return the merge-on-read
     view."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = _layout_dir(f"dv_base_{tag}")
-    sidecar = _layout_dir(f"dv_sidecar_{tag}")
+    tag = scratch.tag(sf_dir)
+    base = scratch.fresh(f"dv_base_{tag}")
+    sidecar = scratch.fresh(f"dv_sidecar_{tag}")
     cols = ["event_id", "user_id", "event_type", "value"]
     e = load(spark, sf_dir, "events").select(*cols)
     (

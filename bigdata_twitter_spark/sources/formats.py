@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import scratch
 from ..registry import query
 from ..tables import load
-from .scans import _workdir
 
 CUSTOMER_SCHEMA = T.StructType(
     [
@@ -65,7 +65,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("c_acctbal", 2).alias("c_acctbal"),
         "c_mktsegment",
     )
-    path = _workdir(spark, f"csv_cust_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"csv_cust_{scratch.tag(sf_dir)}")
     c.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema(CUSTOMER_SCHEMA).option("header", True).csv(path)
 
@@ -99,7 +99,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("o_totalprice", 2).alias("o_totalprice"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_day"),
     )
-    path = _workdir(spark, f"orc_orders_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"orc_orders_{scratch.tag(sf_dir)}")
     o.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -125,7 +125,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.count("*").alias("n"))
-    path = _workdir(spark, f"json_sink_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"json_sink_{scratch.tag(sf_dir)}")
     agg.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -161,7 +161,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read two parquet generations (second adds event_type) with
     mergeSchema, old rows NULL-padded."""
     e = load(spark, sf_dir, "events")
-    root = _workdir(spark, f"evolve_{os.path.basename(sf_dir.rstrip('/'))}")
+    root = scratch.fresh(f"evolve_{scratch.tag(sf_dir)}")
     gen1 = os.path.join(root, "gen=1")
     gen2 = os.path.join(root, "gen=2")
     e.filter(F.col("event_id") % 2 == 0).select(
@@ -220,9 +220,7 @@ def scan_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("string")
         ),
     )
-    path = _workdir(
-        spark, f"csv_quar_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch.fresh(f"csv_quar_{scratch.tag(sf_dir)}")
     e.select(line.alias("value")).write.mode("overwrite").text(path)
     # from_csv (per-row parse expression) rather than a schema'd .csv
     # scan: the scan form trips Spark's
@@ -289,9 +287,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type"),
         ).alias("value")
     )
-    path = _workdir(
-        spark, f"text_events_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch.fresh(f"text_events_{scratch.tag(sf_dir)}")
     e.write.mode("overwrite").text(path)
     raw = spark.read.text(path)
     parts = F.split(F.col("value"), "\\|")

@@ -20,22 +20,16 @@ read is semantically transparent.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..registry import query
 from ..tables import load
 
 PRUNE_TYPES = ("click", "purchase")
 N_BUCKETS = 8
-
-
-def _layout_dir(label: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "bdt_spark_layout")
-    os.makedirs(base, exist_ok=True)
-    return os.path.join(base, label)
 
 
 @query(
@@ -62,7 +56,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write events partitioned by event_type; read back only two
     partitions (pruned at planning time) and aggregate them."""
     e = load(spark, sf_dir, "events")
-    path = _layout_dir(f"part_events_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"part_events_{scratch.tag(sf_dir)}")
     e.write.mode("overwrite").partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path).filter(F.col("event_type").isin(*PRUNE_TYPES))
     return back.groupBy(
@@ -79,7 +73,7 @@ def _bucketed_table(
     """Materialize ``df`` as a bucketed+sorted catalog table (idempotent
     per session) and return the catalog-backed DataFrame."""
     if not spark.catalog.tableExists(name):
-        path = _layout_dir(name)
+        path = scratch.fresh(name)
         (
             df.write.mode("overwrite")
             .option("path", path)
@@ -117,7 +111,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side, aggregated per market segment."""
     from ..numerics import dec
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = scratch.tag(sf_dir).replace(".", "_")
     bo = _bucketed_table(
         spark, f"bkt_orders_{tag}", load(spark, sf_dir, "orders"), "o_custkey"
     )
@@ -164,9 +158,9 @@ N_FRAGMENTS = 64
 def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fragment events into 64 small files, compact to size-targeted
     files, and read the compacted result back (lossless)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    frag = _layout_dir(f"frag_events_{tag}")
-    compact = _layout_dir(f"compact_events_{tag}")
+    tag = scratch.tag(sf_dir)
+    frag = scratch.fresh(f"frag_events_{tag}")
+    compact = scratch.fresh(f"compact_events_{tag}")
     cols = ["event_id", "user_id", "event_type", "value"]
     e = load(spark, sf_dir, "events").select(*cols)
     e.repartition(N_FRAGMENTS).write.mode("overwrite").parquet(frag)
@@ -220,7 +214,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..numerics import dec
 
     e = load(spark, sf_dir, "events")
-    path = _layout_dir(f"clustered_events_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"clustered_events_{scratch.tag(sf_dir)}")
     (
         e.repartitionByRange(N_CLUSTER_FILES, "user_id")
         .sortWithinPartitions("user_id", "ts")
@@ -326,9 +320,7 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = e.join(F.broadcast(b)).withColumn(
         "zval", F.expr(_interleave_sql(f"({zx})", f"({zy})"))
     )
-    path = _layout_dir(
-        f"zorder_events_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch.fresh(f"zorder_events_{scratch.tag(sf_dir)}")
     (
         z.repartitionByRange(N_ZORDER_FILES, "zval")
         .sortWithinPartitions("zval")
@@ -388,8 +380,8 @@ def scan_manifest_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..numerics import dec
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = _layout_dir(f"manifest_events_{tag}")
+    tag = scratch.tag(sf_dir)
+    path = scratch.fresh(f"manifest_events_{tag}")
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     (
         e.repartitionByRange(N_MANIFEST_FILES, "user_id")
@@ -491,8 +483,8 @@ def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookups (min id, max id, and an absent id) through
     per-file Bloom sidecars over a hash-scattered events layout —
     read only files whose filter passes a probe."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = _layout_dir(f"bloom_events_{tag}")
+    tag = scratch.tag(sf_dir)
+    path = scratch.fresh(f"bloom_events_{tag}")
     e = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.col("value").cast("double")
     )
@@ -633,8 +625,8 @@ def scan_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..numerics import dec
     from ..tables import load as _load
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = _layout_dir(f"evo_events_{tag}")
+    tag = scratch.tag(sf_dir)
+    base = scratch.fresh(f"evo_events_{tag}")
     e = _load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type",
         F.col("value").cast("double").alias("value"),

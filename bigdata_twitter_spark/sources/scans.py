@@ -16,13 +16,11 @@ parquet the at-rest format (columnar, predicate/projection pushdown).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import scratch
 from ..registry import query
 from ..tables import load
 
@@ -75,12 +73,6 @@ TWEET_SCHEMA = T.StructType(
 )
 
 
-def _workdir(spark: SparkSession, label: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "bdt_spark_io")
-    os.makedirs(base, exist_ok=True)
-    return os.path.join(base, label)
-
-
 @query(
     "scan_parquet",
     sql="SELECT event_id, ts, user_id, event_type, value, props FROM events",
@@ -116,7 +108,7 @@ def scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON writer/reader path is lossless for this schema.
     """
     d = load(spark, sf_dir, "documents")
-    path = _workdir(spark, f"json_docs_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"json_docs_{scratch.tag(sf_dir)}")
     d.write.mode("overwrite").json(path)
     back = spark.read.schema(DOCUMENT_SCHEMA).json(path)
     return back.groupBy("lang").agg(
@@ -147,7 +139,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_orders"),
         F.sum(dec("o_totalprice")).cast("double").alias("total_price"),
     )
-    path = _workdir(spark, f"sink_orders_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.fresh(f"sink_orders_{scratch.tag(sf_dir)}")
     agg.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
@@ -214,9 +206,7 @@ def tweet_hashtag_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("entities"),
         )
     )
-    path = _workdir(
-        spark, f"tweets_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch.fresh(f"tweets_{scratch.tag(sf_dir)}")
     e.select(tweet.alias("value")).write.mode("overwrite").text(path)
     tweets = spark.read.schema(TWEET_SCHEMA).json(path)
     tags = tweets.select(

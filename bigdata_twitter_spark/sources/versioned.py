@@ -31,6 +31,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..numerics import dsum, dsum_sql
 from ..registry import query
 from ..tables import load
@@ -38,10 +39,10 @@ from ..tables import load
 DELTA_MOD = 4  # every 4th event gets a corrected row in commit 1
 DELTA_BUMP = 50.0  # exact-in-binary value delta (cross-engine safe)
 
-# Physical-layout record of the most recent run (the working directory
-# is removed after the summary materializes), so tests can assert the
-# commit-cost claims — delta file row count, manifest contents —
-# without racing the cleanup.
+# Physical-layout record of the most recent run (the next call
+# reclaims the working directory), so tests can assert the commit-cost
+# claims — delta file row count, manifest contents — without reading
+# the directory.
 LAST_RUN_INFO: dict = {}
 
 
@@ -143,14 +144,9 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-commit versioned events table; per-version resolved stats
     read back through the manifests (v0 read AFTER v1 committed)."""
     e = load(spark, sf_dir, "events")
-    # Unique per call: a fixed shared path let concurrent runs (parity
-    # harness + pytest, or two scale factors) overwrite each other's
-    # base files mid-read.  The table is materialized to its 2-row
-    # summary before the directory is removed, so laziness cannot
-    # outlive the files.
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_mor_")
+    # The table is materialized to its 2-row summary before the call
+    # returns, so the next call may reclaim the directory.
+    root = scratch.fresh("events_mor")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     base = e.select(*cols, F.lit(0).alias("commit"))
     delta = (
@@ -199,7 +195,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).count(),
         }
     )
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "version int, n_rows bigint, sum_value double, n_from_delta bigint",
@@ -241,9 +236,7 @@ def table_compact_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compact the two-commit versioned table into a v2 whose resolved
     content equals v1 while referencing a single pre-resolved dir."""
     e = load(spark, sf_dir, "events")
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_compact_")
+    root = scratch.fresh("events_compact")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     base = e.select(*cols, F.lit(0).alias("commit"))
     delta = (
@@ -292,7 +285,6 @@ def table_compact_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]
         )
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows, "version int, n_rows bigint, sum_value double, n_source_dirs int"
     )
@@ -358,9 +350,7 @@ def table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a versioned events table whose delta carries updates, deletes
     (tombstones), and freshly-minted inserts."""
     e = load(spark, sf_dir, "events")
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_feed_")
+    root = scratch.fresh("events_feed")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     is_del = F.col("event_id") % FEED_DELETE_MOD == FEED_DELETE_REM
     base = e.select(*cols, F.lit("upsert").alias("op"))
@@ -417,7 +407,6 @@ def table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         out, "change_type string, event_type string, n bigint, sum_value double"
     )
@@ -461,9 +450,7 @@ def table_vacuum_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vacuum the 3-version chain (base, merge-on-read, compacted)
     with a keep-latest-only retention and prove v2 is untouched."""
     e = load(spark, sf_dir, "events")
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_vacuum_")
+    root = scratch.fresh("events_vacuum")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     base = e.select(*cols, F.lit(0).alias("commit"))
     delta = (
@@ -540,7 +527,6 @@ def table_vacuum_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(os.path.join(root, d))
 
     rows.append(stats("after"))
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "phase string, n_manifests int, n_data_dirs int, "
@@ -602,9 +588,7 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     data files), write a clone-only delta, and prove independent
     evolution with per-table resolved stats."""
     e = load(spark, sf_dir, "events")
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_clone_")
+    root = scratch.fresh("events_clone")
     src_root = os.path.join(root, "src")
     clone_root = os.path.join(root, "clone")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
@@ -697,7 +681,6 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         n_new = len(data_dirs(troot) - dirs_at_clone[troot])
         rows.append((name, r["n_rows"], r["sum_value"], n_new))
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "snapshot string, n_rows bigint, sum_value double, "
@@ -852,9 +835,7 @@ def table_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-commit versioned table: base, bad delta, then RESTORE to
     v0 as v2 (metadata-only rollback); per-version resolved stats."""
     e = load(spark, sf_dir, "events")
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_restore_")
+    root = scratch.fresh("events_restore")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     base = e.select(*cols, F.lit(0).alias("commit"))
     delta = (
@@ -902,7 +883,6 @@ def table_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
             "history_preserved": sorted(manifests),
         }
     )
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "version int, n_rows bigint, sum_value double, n_from_delta bigint",
@@ -953,9 +933,7 @@ def table_schema_evolution_versioned(
     """Two-commit versioned table where commit 1 ADDS a column;
     per-version row/score stats read through mergeSchema."""
     e = load(spark, sf_dir, "events")
-    base_dir = os.path.join(tempfile.gettempdir(), "bdt_spark_versioned")
-    os.makedirs(base_dir, exist_ok=True)
-    root = tempfile.mkdtemp(dir=base_dir, prefix="events_evolve_")
+    root = scratch.fresh("events_evolve")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     base = e.select(*cols, F.lit(0).alias("commit"))
     delta = (
@@ -1013,7 +991,6 @@ def table_schema_evolution_versioned(
             "v1_null_filled_base_rows": True,
         }
     )
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "version int, n_rows bigint, n_scored bigint, sum_score_cents bigint",

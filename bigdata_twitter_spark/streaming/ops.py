@@ -25,7 +25,6 @@ import datetime as dt
 import os
 import shutil
 import sys
-import tempfile
 import time
 import uuid
 from decimal import Decimal
@@ -35,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import scratch
 from ..numerics import dsum, dsum_sql
 from ..registry import query
 from ..tables import load
@@ -49,13 +49,6 @@ EVENTS_US_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def _fresh_dir(label: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "bdt_spark_stream", label)
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    return base
 
 
 def _write_sentinel_file(path: str, rows: list[tuple]) -> str:
@@ -135,8 +128,7 @@ def _replay_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
     cached = _REPLAY_CACHE.get(key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    label = f"{os.path.basename(sf_dir.rstrip('/'))}_x{copies}"
-    path = _fresh_dir(f"replay_{label}")
+    path = scratch.fresh(f"replay_{scratch.tag(sf_dir)}_x{copies}")
     e = load(spark, sf_dir, "events")
     for _ in range(copies):
         e.write.mode("append").parquet(path)
@@ -242,7 +234,7 @@ def _run_to_parquet(
     data-sized results never pass through driver memory (the scale path
     for passthrough/dedup streams; memory sink stays for result-sized
     windowed aggregates)."""
-    out = _fresh_dir(f"bridge_{label}_{uuid.uuid4().hex[:8]}")
+    out = scratch.fresh(f"bridge_{label}_{uuid.uuid4().hex[:8]}")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
@@ -323,7 +315,7 @@ def source_stream_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream → foreachBatch → parquet sink → read back (lossless bridge)."""
-    out = _fresh_dir(f"fob_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch.fresh(f"fob_{scratch.tag(sf_dir)}")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
@@ -446,9 +438,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, append mode — closed sessions emit on watermark passage)."""
     base = load(spark, sf_dir, "events")
     max_ts = base.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    path = _fresh_dir(
-        f"replay_session_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch.fresh(f"replay_session_{scratch.tag(sf_dir)}")
     # ONE file for the whole base replay (same late-data reasoning as
     # stream_stream_join_outer: rows split across micro-batches would
     # be dropped against the earlier batch's watermark).
@@ -599,7 +589,7 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit-state per-user running totals (exact decimal accumulation)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    out = _fresh_dir(f"stateful_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch.fresh(f"stateful_{scratch.tag(sf_dir)}")
     out_schema = "user_id long, n_events long, total_value double"
 
     stateful = (
@@ -800,8 +790,8 @@ def stream_upsert_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import commit_next
 
-    label = os.path.basename(sf_dir.rstrip("/"))
-    root = _fresh_dir(f"upsertv_{label}_{uuid.uuid4().hex[:8]}")
+    label = scratch.tag(sf_dir)
+    root = scratch.fresh(f"upsertv_{label}_{uuid.uuid4().hex[:8]}")
     man_dir = os.path.join(root, "_manifests")
     os.makedirs(man_dir, exist_ok=True)
 
@@ -941,17 +931,17 @@ N_CKPT_PARTS = 8
 def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase file-stream ingest sharing one checkpoint: the second
     (restarted) run resumes from committed offsets — output ≡ batch."""
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
-    staged = _fresh_dir(f"ckpt_stage_{tag}")
+    tag = f"{scratch.tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
+    staged = scratch.fresh(f"ckpt_stage_{tag}")
     load(spark, sf_dir, "events").repartition(N_CKPT_PARTS).write.mode(
         "overwrite"
     ).parquet(staged)
     parts = sorted(
         f for f in os.listdir(staged) if f.endswith(".parquet")
     )
-    src = _fresh_dir(f"ckpt_src_{tag}")
-    ckpt = _fresh_dir(f"ckpt_log_{tag}")
-    out = _fresh_dir(f"ckpt_out_{tag}")
+    src = scratch.fresh(f"ckpt_src_{tag}")
+    ckpt = scratch.fresh(f"ckpt_log_{tag}")
+    out = scratch.fresh(f"ckpt_out_{tag}")
 
     def run_once() -> None:
         stream = spark.readStream.schema(EVENTS_US_SCHEMA).parquet(src)
@@ -1031,12 +1021,8 @@ def _ship_vendor(spark: SparkSession) -> None:
     app = sc.applicationId
     if app in _VENDOR_SHIPPED:
         return
-    zip_base = os.path.join(
-        tempfile.gettempdir(), "bdt_spark_vendor_protobuf"
-    )
-    zip_path = zip_base + ".zip"
-    if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip", _VENDOR_DIR)
+    zip_base = os.path.join(scratch.fresh("vendor"), "vendor_protobuf")
+    zip_path = shutil.make_archive(zip_base, "zip", _VENDOR_DIR)
     # Task workers: shipped archive lands on every node's sys.path.
     sc.addPyFile(zip_path)
     # Streaming runner workers (the TWS driver worker) don't receive
@@ -1143,7 +1129,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _fresh_dir(f"tws_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch.fresh(f"tws_{scratch.tag(sf_dir)}")
     out_schema = (
         "user_id long, n_events long, max_value double, max_event_id long"
     )
@@ -1261,9 +1247,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour; unmatched clicks appear with null purchase columns."""
     base = load(spark, sf_dir, "events")
     max_ts = base.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    path = _fresh_dir(
-        f"replay_outer_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch.fresh(f"replay_outer_{scratch.tag(sf_dir)}")
     # ONE file for the whole base replay (coalesce is harness-only —
     # a live stream has no replay problem): if base rows split across
     # micro-batches, rows of batch N+1 older than batch N's watermark
@@ -1423,9 +1407,7 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     e = load(spark, sf_dir, "events")
     cols = [f.name for f in EVENTS_US_SCHEMA.fields]
-    lines_dir = _fresh_dir(
-        f"quarlines_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    lines_dir = scratch.fresh(f"quarlines_{scratch.tag(sf_dir)}")
     good_lines = e.select(F.to_json(F.struct(*cols)).alias("value"))
     bad_lines = e.filter(F.col("event_id") % QUAR_MOD == 0).select(
         F.concat(
@@ -1434,8 +1416,8 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     good_lines.unionAll(bad_lines).write.mode("overwrite").text(lines_dir)
 
-    good_out = _fresh_dir(f"quar_good_{uuid.uuid4().hex[:8]}")
-    bad_out = _fresh_dir(f"quar_dead_{uuid.uuid4().hex[:8]}")
+    good_out = scratch.fresh(f"quar_good_{uuid.uuid4().hex[:8]}")
+    bad_out = scratch.fresh(f"quar_dead_{uuid.uuid4().hex[:8]}")
     stream = (
         spark.readStream.text(lines_dir)
         .select(
@@ -1544,9 +1526,7 @@ def stream_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         hours=BACKFILL_TAIL_HOURS
     )
     history = e.filter(F.col("ts") < F.lit(cutoff))
-    tail_dir = _fresh_dir(
-        f"backfill_tail_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    tail_dir = scratch.fresh(f"backfill_tail_{scratch.tag(sf_dir)}")
     e.filter(F.col("ts") >= F.lit(cutoff)).write.mode("overwrite").parquet(
         tail_dir
     )

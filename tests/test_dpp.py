@@ -10,9 +10,6 @@ dim-filtered join.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from bigdata_twitter_spark.tables import load
@@ -20,10 +17,8 @@ from bigdata_twitter_spark.tables import load
 PICKED = ("click", "error")
 
 
-def test_dpp_prunes_fact_partitions_at_runtime(spark, sf_dir):
-    fact_path = os.path.join(
-        tempfile.gettempdir(), "bdt_spark_layout", "dpp_events"
-    )
+def test_dpp_prunes_fact_partitions_at_runtime(spark, sf_dir, tmp_path):
+    fact_path = str(tmp_path / "dpp_events")
     e = load(spark, sf_dir, "events")
     e.write.mode("overwrite").partitionBy("event_type").parquet(fact_path)
     fact = spark.read.parquet(fact_path)

@@ -7,7 +7,6 @@ on empty input breaks every downstream consumer of its schema).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -110,10 +109,10 @@ ZERO_ROW_KEYS = [
 
 
 @pytest.fixture(scope="module")
-def empty_sf_dir(spark, sf_dir):
+def empty_sf_dir(spark, sf_dir, tmp_path_factory):
     # Fresh per-run dir: a cached fixture would go stale across
     # checkouts (schema/encoding changes) and race parallel workers.
-    out = tempfile.mkdtemp(prefix="bdt_spark_empty_sf_")
+    out = str(tmp_path_factory.mktemp("empty_sf"))
     for name in TABLE_NAMES:
         load(spark, sf_dir, name).limit(0).write.mode("overwrite").parquet(
             os.path.join(out, f"{name}.parquet")

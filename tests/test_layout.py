@@ -6,16 +6,11 @@ test_parity.py like every other key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
+from bigdata_twitter_spark import scratch
 from bigdata_twitter_spark.registry import load_all_operators
-from bigdata_twitter_spark.sources.layout import (
-    N_BUCKETS,
-    PRUNE_TYPES,
-    _layout_dir,
-)
+from bigdata_twitter_spark.sources.layout import N_BUCKETS, PRUNE_TYPES
 from bigdata_twitter_spark.tables import load
 
 SPECS = load_all_operators()
@@ -26,7 +21,7 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir):
     (PartitionCount in the scan), out of the 5 event_type partitions."""
     # Run the operator once so the layout exists.
     SPECS["sink_partitioned_parquet"].fn(spark, sf_dir).collect()
-    path = _layout_dir(f"part_events_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch.path(f"part_events_{scratch.tag(sf_dir)}")
     pruned = spark.read.parquet(path).filter(
         F.col("event_type").isin(*PRUNE_TYPES)
     )
@@ -52,7 +47,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     both scans and contain ZERO Exchange below the join (the final
     aggregation's own exchange is allowed)."""
     SPECS["join_bucketed_colocated"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = scratch.tag(sf_dir).replace(".", "_")
     bo = spark.table(f"bkt_orders_{tag}")
     bc = spark.table(f"bkt_customer_{tag}")
     joined = bo.hint("merge").join(bc.hint("merge"), bo["o_custkey"] == bc["c_custkey"])
@@ -65,7 +60,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
 def test_bucketed_tables_match_source(spark, sf_dir):
     """Bucketed materialization is lossless (row counts match source)."""
     SPECS["join_bucketed_colocated"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = scratch.tag(sf_dir).replace(".", "_")
     assert (
         spark.table(f"bkt_orders_{tag}").count()
         == load(spark, sf_dir, "orders").count()

@@ -6,10 +6,10 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from bigdata_twitter_spark import scratch
 from bigdata_twitter_spark.operators.profiling import N_HIST_BINS
 from bigdata_twitter_spark.registry import load_all_operators
 from bigdata_twitter_spark.sources.layout import (
@@ -25,10 +25,9 @@ def _parquet_files(path: str) -> list[str]:
 def test_compaction_reduces_file_count(spark, sf_dir):
     specs = load_all_operators()
     out = specs["sink_compact_small_files"].fn(spark, sf_dir)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(tempfile.gettempdir(), "bdt_spark_layout")
-    frag = _parquet_files(os.path.join(base, f"frag_events_{tag}"))
-    compact = _parquet_files(os.path.join(base, f"compact_events_{tag}"))
+    tag = scratch.tag(sf_dir)
+    frag = _parquet_files(scratch.path(f"frag_events_{tag}"))
+    compact = _parquet_files(scratch.path(f"compact_events_{tag}"))
     assert len(frag) == N_FRAGMENTS
     # File count must be the size-derived target: ceil(bytes / target).
     n_bytes = sum(os.path.getsize(f) for f in frag)
@@ -61,9 +60,9 @@ def test_clustered_files_have_disjoint_key_spans(spark, sf_dir):
 
     specs = load_all_operators()
     specs["sink_sorted_clustered"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(tempfile.gettempdir(), "bdt_spark_layout")
-    files = _parquet_files(os.path.join(base, f"clustered_events_{tag}"))
+    files = _parquet_files(
+        scratch.path(f"clustered_events_{scratch.tag(sf_dir)}")
+    )
     assert len(files) == N_CLUSTER_FILES
     spans = []
     for f in files:
@@ -88,9 +87,7 @@ def test_zorder_files_are_narrow_in_both_dimensions(spark, sf_dir):
 
     specs = load_all_operators()
     specs["sink_zorder_clustered"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(tempfile.gettempdir(), "bdt_spark_layout")
-    files = _parquet_files(os.path.join(base, f"zorder_events_{tag}"))
+    files = _parquet_files(scratch.path(f"zorder_events_{scratch.tag(sf_dir)}"))
     assert len(files) >= 8
 
     def spans(col: str) -> tuple[list, int]:

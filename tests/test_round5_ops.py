@@ -20,7 +20,7 @@ def test_sharded_jobs_equals_single_job_exact_miner(specs, spark, sf_dir):
     """The union of shard-pair jobs must equal the single-job exact
     all-pairs answer BITWISE (ids and 6dp cosines), and the parquet
     handoff must show one directory per shard-pair job."""
-    from bigdata_twitter_spark.llm import orchestration
+    from bigdata_twitter_spark import scratch
     from bigdata_twitter_spark.llm.orchestration import N_SHARDS
 
     sharded = {
@@ -33,10 +33,8 @@ def test_sharded_jobs_equals_single_job_exact_miner(specs, spark, sf_dir):
     }
     assert sharded == exact
     assert sharded, "fixture should contain pairs at the threshold"
-    # Handoff layout: S(S+1)/2 independent job directories inside THIS
-    # run's dir (the base may hold other processes' run dirs, which
-    # the operator deliberately never reclaims).
-    job_dirs = glob.glob(os.path.join(orchestration.LAST_RUN_DIR, "job_*_*"))
+    # Handoff layout: S(S+1)/2 independent job directories in the run dir.
+    job_dirs = glob.glob(os.path.join(scratch.path("shardjobs"), "job_*_*"))
     assert len(job_dirs) == N_SHARDS * (N_SHARDS + 1) // 2, job_dirs
     # Each unordered pair must land in exactly ONE job (no dedup step):
     # re-read every job dir separately and check disjointness.
@@ -74,56 +72,6 @@ def test_decode_error_channel_quarantines_not_kills(specs, spark, sf_dir):
             )
             assert int(row.pixel_sum) == want
     assert (out.status == "corrupt").sum() == N_FILES // 10
-
-
-def test_sharded_jobs_reclaim_spares_foreign_run_dirs(specs, spark, sf_dir):
-    """A run dir created by ANOTHER process (simulated: a dir the
-    operator did not record in _MY_RUNS) must survive an invocation —
-    rmtree of the shared base while a concurrent harness process is
-    mid-write destroys its in-flight job commit — while THIS process's
-    previous run dir is reclaimed."""
-    import shutil
-
-    from bigdata_twitter_spark.llm import orchestration
-
-    foreign = os.path.join(orchestration._RUN_BASE, "foreign_run")
-    os.makedirs(foreign, exist_ok=True)
-    try:
-        with open(os.path.join(foreign, "in_flight"), "w") as fh:
-            fh.write("x")
-        specs["sim_pairs_sharded_jobs"].fn(spark, sf_dir).collect()
-        first_run = orchestration.LAST_RUN_DIR
-        assert os.path.exists(os.path.join(foreign, "in_flight"))
-        specs["sim_pairs_sharded_jobs"].fn(spark, sf_dir).collect()
-        assert not os.path.exists(first_run)  # own dirs ARE reclaimed
-        assert os.path.exists(os.path.join(foreign, "in_flight"))
-    finally:
-        shutil.rmtree(foreign, ignore_errors=True)
-
-
-def test_reclaim_runs_gcs_stale_foreign_dirs(tmp_path):
-    """Day-old foreign run dirs are crash leftovers and ARE GC'd (the
-    r14 process-local reclaim left them forever — ADVICE r14), while a
-    fresh foreign dir still survives."""
-    import time as _time
-
-    from bigdata_twitter_spark.llm import orchestration
-
-    base = str(tmp_path / "base")
-    stale = os.path.join(base, "stale_run")
-    fresh = os.path.join(base, "fresh_run")
-    os.makedirs(stale)
-    os.makedirs(fresh)
-    old = _time.time() - orchestration._STALE_RUN_AGE_S - 60
-    os.utime(stale, (old, old))
-    mine = os.path.join(base, "my_run")
-    os.makedirs(mine)
-    my_runs = [mine]
-    orchestration.reclaim_runs(my_runs, base)
-    assert my_runs == []
-    assert not os.path.exists(mine)  # own dirs reclaimed
-    assert not os.path.exists(stale)  # stale foreign dirs GC'd
-    assert os.path.exists(fresh)  # fresh foreign dirs survive
 
 
 def test_sharded_jobs_resume_recomputes_only_missing(spark, sf_dir, tmp_path):

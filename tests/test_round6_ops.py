@@ -29,6 +29,7 @@ def test_bucket_jobs_equals_exact_miner_and_runs_linear_jobs(
 ):
     """Same pair set (ids AND 6dp cosines) as the exact all-pairs
     miner, with ≤ S jobs on disk where mod-sharding needs S(S+1)/2."""
+    from bigdata_twitter_spark import scratch
     from bigdata_twitter_spark.llm import bucketjobs as bj
 
     mined = {
@@ -47,9 +48,7 @@ def test_bucket_jobs_equals_exact_miner_and_runs_linear_jobs(
     assert audit["mod_shard_jobs"] == (
         bj.BUCKET_JOB_SHARDS * (bj.BUCKET_JOB_SHARDS + 1) // 2
     )
-    # Glob inside THIS run's dir: the base may hold other processes'
-    # run dirs, which the operator deliberately never reclaims.
-    job_dirs = glob.glob(os.path.join(bj.LAST_RUN_DIR, "job_*"))
+    job_dirs = glob.glob(os.path.join(scratch.path("bucketjobs"), "job_*"))
     assert len(job_dirs) == audit["jobs_run"]
 
 
