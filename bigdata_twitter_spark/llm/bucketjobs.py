@@ -236,11 +236,10 @@ def sim_pairs_bucket_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard jobs; cross-shard jobs are provably empty and never run."""
     run_dir = scratch.fresh("bucketjobs")
     job_dirs = run_bucket_jobs(spark, sf_dir, run_dir, BUCKET_JOB_SHARDS)
+    schema = "a_id long, b_id long, cosine double"
     if not job_dirs:
-        return spark.createDataFrame(
-            [], "a_id long, b_id long, cosine double"
-        )
+        return spark.createDataFrame([], schema)
     # A true pair collides in several bands, possibly in buckets owned
     # by DIFFERENT shards; rows are identical (deterministic cosine),
     # so one aggregate-sized distinct over the union dedups.
-    return spark.read.parquet(*job_dirs).distinct()
+    return spark.read.schema(schema).parquet(*job_dirs).distinct()

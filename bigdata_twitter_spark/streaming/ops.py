@@ -21,7 +21,6 @@ the driver.
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 import shutil
 import sys
@@ -51,7 +50,12 @@ EVENTS_US_SCHEMA = T.StructType(
 )
 
 
-def _write_sentinel_file(path: str, rows: list[tuple]) -> str:
+_DAY_US = 86_400_000_000
+
+
+def _write_sentinel_file(
+    spark: SparkSession, path: str, rows: list[tuple]
+) -> str:
     """Write a sentinel events parquet file DRIVER-SIDE (pyarrow).
 
     The sentinel protocol's 1-2 row files used to go through
@@ -60,27 +64,22 @@ def _write_sentinel_file(path: str, rows: list[tuple]) -> str:
     this environment (each write re-pays Python-worker spin-up), i.e.
     ~9 s of the session-window/outer-join replay construction at any
     SF.  A driver-side write of a 2-row file is not data work (guide
-    §5); the file is bit-compatible with the Spark-written base file
-    (int64/timestamp[us, UTC]/float64/string columns, read back under
-    the explicit EVENTS_US_SCHEMA) and keeps the ``.parquet`` suffix
-    the replay-dir bookkeeping expects."""
+    §5).  ``rows`` are EVENTS_US_SCHEMA tuples whose ``ts`` is epoch
+    µs, so no wall-clock conversion touches the instant; the arrow
+    schema is EVENTS_US_SCHEMA's, its ``ts`` labelled with the session
+    timezone, and the file keeps the ``.parquet`` suffix the replay-dir
+    bookkeeping expects."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    utc = dt.timezone.utc
-    cols = list(zip(*rows))
-    table = pa.table(
-        {
-            "event_id": pa.array(cols[0], pa.int64()),
-            "ts": pa.array(
-                [t.replace(tzinfo=utc) for t in cols[1]],
-                pa.timestamp("us", tz="UTC"),
-            ),
-            "user_id": pa.array(cols[2], pa.int64()),
-            "event_type": pa.array(cols[3], pa.string()),
-            "value": pa.array(cols[4], pa.float64()),
-            "props": pa.array(cols[5], pa.string()),
-        }
+    schema = to_arrow_schema(EVENTS_US_SCHEMA)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    schema = schema.set(
+        schema.get_field_index("ts"), pa.field("ts", pa.timestamp("us", tz=tz))
+    )
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
     )
     out = os.path.join(path, f"sentinel-{uuid.uuid4().hex[:12]}.parquet")
     pq.write_table(table, out)
@@ -219,6 +218,7 @@ def _run_to_table(stream_df: DataFrame, mode: str) -> DataFrame:
             stream_df.writeStream.outputMode(mode)
             .format("memory")
             .queryName(name)
+            .option("checkpointLocation", scratch.fresh("ckpt_memory"))
             .trigger(availableNow=True)
             .start()
         )
@@ -242,14 +242,15 @@ def _run_to_parquet(
     with _stream_shuffle(stream_df.sparkSession):
         q = (
             stream_df.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", scratch.fresh(f"ckpt_{label}"))
             .trigger(availableNow=True)
             .start()
         )
         _await_or_raise(q)
-    reader = stream_df.sparkSession.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(out)
+    return (
+        stream_df.sparkSession.read.schema(schema or stream_df.schema)
+        .parquet(out)
+    )
 
 
 @query(
@@ -297,6 +298,7 @@ def source_stream_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
+            .option("checkpointLocation", scratch.fresh("ckpt_rate"))
             .trigger(once=True)
             .start()
         )
@@ -324,6 +326,7 @@ def sink_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             _stream_events(spark, sf_dir)
             .writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", scratch.fresh("ckpt_fob"))
             .trigger(availableNow=True)
             .start()
         )
@@ -437,7 +440,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming 30-minute-gap sessions per user (native session
     windows, append mode — closed sessions emit on watermark passage)."""
     base = load(spark, sf_dir, "events")
-    max_ts = base.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    max_us = base.agg(F.unix_micros(F.max("ts")).alias("m")).collect()[0]["m"]
     path = scratch.fresh(f"replay_session_{scratch.tag(sf_dir)}")
     # ONE file for the whole base replay (same late-data reasoning as
     # stream_stream_join_outer: rows split across micro-batches would
@@ -461,8 +464,9 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the former 1-row Spark writes cost 4-8 s EACH here (r15).
     for days, eid in ((30, -1), (60, -2)):
         _write_sentinel_file(
+            spark,
             path,
-            [(eid, max_ts + dt.timedelta(days=days), -1, "click", 0.0, "{}")],
+            [(eid, max_us + days * _DAY_US, -1, "click", 0.0, "{}")],
         )
         if eid == -1:
             grp0 = _parts()
@@ -611,11 +615,12 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stateful.writeStream.foreachBatch(write_batch)
             .outputMode("update")
+            .option("checkpointLocation", scratch.fresh("ckpt_stateful"))
             .trigger(availableNow=True)
             .start()
         )
         _await_or_raise(q)
-    return spark.read.parquet(out)
+    return spark.read.schema(out_schema).parquet(out)
 
 
 @query(
@@ -816,6 +821,7 @@ def stream_upsert_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             _stream_events(spark, sf_dir)
             .writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", scratch.fresh("ckpt_upsertv"))
             .trigger(availableNow=True)
             .start()
         )
@@ -1151,6 +1157,7 @@ def _run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stateful.writeStream.foreachBatch(write_batch)
             .outputMode("update")
+            .option("checkpointLocation", scratch.fresh("ckpt_tws"))
             .trigger(availableNow=True)
             .start()
         )
@@ -1163,7 +1170,7 @@ def _run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final state.  This is the correctness contract — not an
     # assumption that availableNow ran as one batch (ADVICE r3).
     return (
-        spark.read.parquet(out)
+        spark.read.schema(out_schema).parquet(out)
         .groupBy("user_id")
         .agg(
             F.max(
@@ -1246,7 +1253,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clicks left-outer-joined to same-user purchases within the next
     hour; unmatched clicks appear with null purchase columns."""
     base = load(spark, sf_dir, "events")
-    max_ts = base.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    max_us = base.agg(F.unix_micros(F.max("ts")).alias("m")).collect()[0]["m"]
     path = scratch.fresh(f"replay_outer_{scratch.tag(sf_dir)}")
     # ONE file for the whole base replay (coalesce is harness-only —
     # a live stream has no replay problem): if base rows split across
@@ -1278,11 +1285,11 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp0: set[str] = set()
     for days, eid in ((30, -1), (60, -3)):
         _write_sentinel_file(
+            spark,
             path,
             [
-                (eid, max_ts + dt.timedelta(days=days), -1,
-                 "click", 0.0, "{}"),
-                (eid - 1, max_ts + dt.timedelta(days=days), -1,
+                (eid, max_us + days * _DAY_US, -1, "click", 0.0, "{}"),
+                (eid - 1, max_us + days * _DAY_US, -1,
                  "purchase", 0.0, "{}"),
             ],
         )
@@ -1441,6 +1448,7 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _stream_shuffle(spark):
         q = (
             stream.writeStream.foreachBatch(route)
+            .option("checkpointLocation", scratch.fresh("ckpt_quar"))
             .trigger(availableNow=True)
             .start()
         )

@@ -15,6 +15,13 @@ are fixed in exactly one place:
 2. All loads run through :func:`session.configure` so a driver-owned
    session gets the required runtime confs.
 
+Spark infers a file's schema with a job that reads its footer.  That
+happens once per file identity (:func:`_identity`: path, inode, mtime,
+size, plus every file under a directory), so a rewrite at the same path
+is inferred afresh; every other load reads with the cached schema and
+starts no job.  The ``events.ts`` dispatch runs on that same inferred
+schema.
+
 At 100 TB these tables would be partitioned/bucketed parquet datasets;
 the loaders take a directory and a table name, so swapping a single
 file for a partitioned layout is a zero-change operation for every
@@ -23,8 +30,12 @@ operator above this module.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from .session import configure
@@ -49,10 +60,40 @@ TABLE_NAMES = [
 BROADCAST_DIMS = {"region", "nation", "supplier", "part"}
 
 
+def _identity(path: str) -> tuple:
+    """Key that changes whenever the parquet at ``path`` can have: its
+    resolved path, inode, mtime and size, plus, for a Spark-written
+    directory, the relative path, mtime and size of every file in it.
+    An in-place rewrite that keeps the size within one filesystem
+    timestamp tick is not seen; rewrite a fixture by write-then-rename."""
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_ino, st.st_mtime_ns, st.st_size)
+    if stat.S_ISDIR(st.st_mode):
+        files = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append(
+                    (os.path.relpath(f, path), fst.st_mtime_ns, fst.st_size)
+                )
+        key += tuple(sorted(files))
+    return key
+
+
+# file identity → the schema Spark inferred for it (under the confs
+# :func:`configure` pins, which inference depends on).
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with engine-canonical column types."""
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _identity(path)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(_SCHEMAS[key]).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -68,9 +109,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# (sf_dir, name) → scan split count; .rdd forces physical planning, so
+# file identity → scan split count; .rdd forces physical planning, so
 # the probe is done once per fixture file, not once per query.
-_SCAN_SPLITS: dict[tuple[str, str], int] = {}
+_SCAN_SPLITS: dict[tuple, int] = {}
 
 
 def spread(df: DataFrame, sf_dir: str, name: str, *cols: str) -> DataFrame:
@@ -90,7 +131,7 @@ def spread(df: DataFrame, sf_dir: str, name: str, *cols: str) -> DataFrame:
     """
     spark = df.sparkSession
     width = spark.sparkContext.defaultParallelism
-    key = (sf_dir, name)
+    key = _identity(f"{sf_dir}/{name}.parquet")
     if key not in _SCAN_SPLITS:
         _SCAN_SPLITS[key] = load(spark, sf_dir, name).rdd.getNumPartitions()
     if _SCAN_SPLITS[key] >= width:
