@@ -37,8 +37,9 @@ assignment, one shuffle into the partitioned write — sink_partitioned_
 parquet's shape).  SERVE touches the KB-sized codebook, ONE point
 lookup for the query vector (pushed filter), and the P probed bucket
 directories listed EXPLICITLY in the read path — reading a non-probed
-bucket is physically impossible, not merely pruned; LAST_RUN_INFO
-records the probed dirs so tests pin that.  At 100 TB the build is the
+bucket is physically impossible, not merely pruned; the run record
+(``obs.last("ann_index_search")``) lists the probed dirs so tests pin
+that.  At 100 TB the build is the
 nightly job and serve cost is independent of corpus growth except
 through bucket size (K scales with sqrt(N) like the kmeans two-tier).
 """
@@ -61,6 +62,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import obs
 from ..registry import query
 from ..tables import load
 from ..sources.versioned import CommitConflict, commit_version
@@ -73,10 +75,6 @@ ANN_QUERY_ID = 7
 
 INDEX_BASE = "/tmp/bdt_spark_ann_index"
 _KEEP_ROOTS = 8  # newest index roots kept; older corpora reclaimed
-
-# Physical record of the most recent build/serve (tests assert the
-# never-rescan and staleness contracts here, not by racing /tmp).
-LAST_RUN_INFO: dict = {}
 
 
 def _path_digest(sf_dir: str) -> str:
@@ -306,7 +304,7 @@ def ensure_index(
         "persisted, not what was computed.  The persisted version "
         "number is deliberately NOT in the certified output (it "
         "depends on /tmp index-root history, not on the data); tests "
-        "pin it through LAST_RUN_INFO instead."
+        "pin it through the run record instead."
     ),
 )
 def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,15 +322,13 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.isdir(buckets_dir)
         else []
     )
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "op": "build",
-            "root": root,
-            "version": version,
-            "rebuilt": rebuilt,
-            "bucket_dirs": bucket_dirs,
-        }
+    obs.record(
+        "ann_index_build",
+        op="build",
+        root=root,
+        version=version,
+        rebuilt=rebuilt,
+        bucket_dirs=bucket_dirs,
     )
     # Nullability mirrors the non-empty plan exactly (count/lit are
     # non-nullable) so the empty-corpus schema is bit-identical.
@@ -403,7 +399,7 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vector (one pushed-filter point lookup), then reads ONLY "
         "the probed bucket directories — they are passed as explicit "
         "paths, so scanning a non-probed bucket is physically "
-        "impossible (stronger than partition pruning; LAST_RUN_INFO "
+        "impossible (stronger than partition pruning; the run record "
         "pins the dirs read).  Exact cosine + TakeOrdered(k) over "
         "~P/K of the index.  Staleness pin: the index root is keyed "
         "by the corpus CONTENT fingerprint (file sizes + mtimes, "
@@ -426,54 +422,45 @@ def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("cosine", DoubleType(), True),
         ]
     )
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "op": "search",
-            "root": root,
-            "version": version,
-            "rebuilt": rebuilt,
-            "probed_dirs": [],
-            "bucket_dirs_total": 0,
-        }
+    # An empty corpus has an empty index (no buckets dir).
+    all_buckets = (
+        sorted(d for d in os.listdir(buckets_dir) if d.startswith("clabel="))
+        if os.path.isdir(buckets_dir)
+        else []
     )
-    if not os.path.isdir(buckets_dir):  # empty corpus -> empty index
-        return spark.createDataFrame([], schema)
-    all_buckets = sorted(
-        d for d in os.listdir(buckets_dir) if d.startswith("clabel=")
-    )
-    LAST_RUN_INFO["bucket_dirs_total"] = len(all_buckets)
-    if not all_buckets:
-        return spark.createDataFrame([], schema)
-
     qrows = (
         load(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") == ANN_QUERY_ID)
         .select("embedding")
         .collect()
+        if all_buckets
+        else []
     )
-    if not qrows:  # query id absent from this corpus
-        return spark.createDataFrame([], schema)
-    qv = [float(x) for x in qrows[0]["embedding"]]
-
-    codebook = spark.read.parquet(os.path.join(data_dir, "codebook"))
-    probe_rows = (
-        codebook.select(
-            "clabel",
-            spark_cosine(
-                "cvec", f"array({', '.join(repr(x) for x in qv)})"
-            ).alias("q_cos"),
+    probed: list[str] = []
+    if qrows:  # else: query id absent from this corpus
+        emb = qrows[0]["embedding"]
+        qv = f"array({', '.join(repr(float(x)) for x in emb)})"
+        codebook = spark.read.parquet(os.path.join(data_dir, "codebook"))
+        probe_rows = (
+            codebook.select("clabel", spark_cosine("cvec", qv).alias("q_cos"))
+            .orderBy(F.col("q_cos").desc(), "clabel")
+            .limit(ANN_PROBES)
+            .collect()
         )
-        .orderBy(F.col("q_cos").desc(), "clabel")
-        .limit(ANN_PROBES)
-        .collect()
+        probed = [
+            os.path.join(buckets_dir, f"clabel={r['clabel']}")
+            for r in probe_rows
+            if f"clabel={r['clabel']}" in all_buckets
+        ]
+    obs.record(
+        "ann_index_search",
+        op="search",
+        root=root,
+        version=version,
+        rebuilt=rebuilt,
+        probed_dirs=probed,
+        bucket_dirs_total=len(all_buckets),
     )
-    probed = [
-        os.path.join(buckets_dir, f"clabel={r['clabel']}")
-        for r in probe_rows
-        if f"clabel={r['clabel']}" in all_buckets
-    ]
-    LAST_RUN_INFO["probed_dirs"] = probed
     if not probed:
         return spark.createDataFrame([], schema)
 
@@ -483,9 +470,7 @@ def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").cast("bigint").alias("vec_id"),
             F.col("label").cast("int").alias("label"),
-            spark_cosine(
-                "embedding", f"array({', '.join(repr(x) for x in qv)})"
-            ).alias("cosine"),
+            spark_cosine("embedding", qv).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(ANN_TOP_K)

@@ -32,8 +32,8 @@ runs BEFORE near-dup mining in any real pipeline (hash the vector
 bytes — dedup_exact's shape on the embedding column); this operator's
 contract is near-duplicate pair mining over an exact-deduped corpus.
 When the cap fires it is NOT silent: every run records dropped
-bucket/row counts in :data:`LAST_CAP_AUDIT` and logs a warning, so a
-degenerate corpus is visible instead of inferred (ADVICE r3).
+bucket/row counts (``obs.last("sim_pairs_bucketed")``) and logs a
+warning, so a degenerate corpus is visible instead of inferred.
 
 Scale posture: the plane set is a compile-time constant (seeded PRNG,
 no runtime randomness), the sign/band computation is per-row JVM
@@ -48,7 +48,6 @@ count() (at 100 TB: catalog row-count statistics, a metadata read).
 
 from __future__ import annotations
 
-import logging
 import math
 import random
 
@@ -56,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, persist_fresh, spread
+from ..tables import drop_hot_groups, load, persist_fresh, spread
 from .vectors import DIMS, PAIR_COSINE_THRESHOLD
 
 SRP_BANDS = 16
@@ -89,15 +88,6 @@ PLANES: list[list[float]] = [
     [_rng.gauss(0.0, 1.0) for _ in range(DIMS)]
     for _ in range(SRP_BANDS * SRP_MAX_BITS)
 ]
-
-_log = logging.getLogger(__name__)
-
-# Audit of the most recent run's hot-bucket cap (ADVICE r3 / VERDICT
-# "no silent caps"): a degenerate corpus (> cap identical vectors)
-# must be DETECTABLE, not silently under-reported.  The counts come
-# from the already-persisted metadata-sized band table, so the audit
-# costs one tiny aggregate, and bench/parity tooling can surface it.
-LAST_CAP_AUDIT: dict[str, int] = {"dropped_buckets": 0, "dropped_rows": 0}
 
 
 def bits_for(n: int) -> int:
@@ -147,8 +137,8 @@ def _band_values(r: int) -> F.Column:
         "bytes) and exact cosines are computed inside the group by a "
         "vectorized Arrow UDF whose dim-sequential fold is bit-equal "
         "to the JVM/DuckDB expression twins. A hot-bucket cap (5000) "
-        "bounds degenerate collisions with a run-level audit "
-        "(LAST_CAP_AUDIT). The scale-safe replacement for "
+        "bounds degenerate collisions with a run-level audit. "
+        "The scale-safe replacement for "
         "sim_pairs_threshold's O(n²) cross-join."
     ),
 )
@@ -172,37 +162,11 @@ def sim_pairs_bucketed(
     # The plane-dot folds dominate; persist the 3-int band rows so the
     # self-join computes the projections once, not twice.
     bands = persist_fresh("srp_bands", sf_dir, bands)
-    # Hot-bucket cap: bucket sizes are ≤ bands × 2^r rows (metadata-
-    # sized).  The audit collects the >cap bucket LIST (not just its
-    # counts — same one job, the list is empty on normal corpora), so
-    # the degenerate path can keep-filter BEFORE the payload shuffle.
-    sizes = bands.groupBy("band", "bval").agg(F.count("*").alias("occ"))
-    hot = sizes.filter(F.col("occ") > HOT_BUCKET_CAP).collect()
-    LAST_CAP_AUDIT["dropped_buckets"] = len(hot)
-    LAST_CAP_AUDIT["dropped_rows"] = int(sum(r["occ"] for r in hot))
-    if hot:
-        _log.warning(
-            "sim_pairs_bucketed: hot-bucket cap (%d) dropped %d "
-            "bucket(s) / %d band-row(s); pairs inside them are NOT "
-            "mined — run exact dedup upstream if the corpus carries "
-            ">cap identical vectors",
-            HOT_BUCKET_CAP, len(hot), LAST_CAP_AUDIT["dropped_rows"],
-        )
-        # Audit-guarded keep-filter (VERDICT r14 item 1): a >cap
-        # bucket must never enter the payload shuffle — Arrow
-        # materializes the ENTIRE group (embeddings included) in one
-        # Python worker before the verifier's k>cap early-return can
-        # discard it, so the group-local cap alone is a single-
-        # executor OOM at scale.  The hot list is metadata-sized
-        # (≤ bands × 2^r buckets), broadcast-anti-joined against the
-        # band rows; the clean path below stays join-free.
-        hot_df = spark.createDataFrame(
-            [(r["band"], r["bval"]) for r in hot],
-            sizes.select("band", "bval").schema,
-        )
-        bands = bands.join(
-            F.broadcast(hot_df), ["band", "bval"], "left_anti"
-        )
+    # Hot-bucket cap: bucket sizes are ≤ bands × 2^r rows, so the
+    # over-cap list is metadata-sized.
+    bands = drop_hot_groups(
+        "sim_pairs_bucketed", bands, ["band", "bval"], HOT_BUCKET_CAP
+    )
     # The cap is ALSO enforced GROUP-LOCALLY inside _verify_bucket (a
     # bucket with more than HOT_BUCKET_CAP members returns no pairs) —
     # defense in depth behind the keep-filter above, and the only

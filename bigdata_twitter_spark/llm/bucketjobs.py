@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import scratch
+from .. import obs, scratch
 from ..registry import query
 from ..tables import load, persist_fresh, spread
 from .bucketed import (
@@ -62,12 +62,6 @@ BUCKET_JOB_SHARDS = 4  # S — same default as orchestration.N_SHARDS
 # harness scale (sf0.1 = 5000 vectors → r = 5) with headroom.  Past it
 # the operator is bench-only (regime guard below).
 ORACLE_BITS_MAX = 6
-
-# Job-loop audit of the most recent run (the "no silent caps" rule —
-# VERDICT r4/r5): how many jobs COULD have run under mod-sharding,
-# how many bucket-sharding actually ran, and how many shards were
-# skipped because they own no minable bucket.
-LAST_JOB_AUDIT: dict[str, int] = {}
 
 
 def _band_values_rounded(r: int) -> F.Column:
@@ -94,8 +88,9 @@ def run_bucket_jobs(
     Shard ownership: ``(band * 2^r + bval) % n_shards`` — every bucket
     in exactly one shard, so cross-shard jobs are provably empty and
     never materialize.  A shard owning no minable bucket (occupancy
-    outside [2, cap]) is skipped entirely; the skip is recorded in
-    :data:`LAST_JOB_AUDIT`, never silent.  Resume semantics are
+    outside [2, cap]) is skipped entirely; the skip is recorded under
+    ``"sim_pairs_bucket_jobs"`` (with the jobs mod-sharding would have
+    run and the jobs this loop ran), never silent.  Resume semantics are
     orchestration.run_shard_jobs's: _SUCCESS-marked jobs are skipped,
     torn jobs overwritten."""
     e = load(spark, sf_dir, "embeddings")
@@ -145,15 +140,13 @@ def run_bucket_jobs(
             schema="a_id long, b_id long, cosine double",
         )
         pairs.write.mode("overwrite").parquet(job_dir)
-    LAST_JOB_AUDIT.clear()
-    LAST_JOB_AUDIT.update(
-        {
-            "shards": n_shards,
-            "jobs_run": len(live),
-            "shards_skipped_empty": n_shards - len(live),
-            "mod_shard_jobs": n_shards * (n_shards + 1) // 2,
-            "band_bits": r,
-        }
+    obs.record(
+        "sim_pairs_bucket_jobs",
+        shards=n_shards,
+        jobs_run=len(live),
+        shards_skipped_empty=n_shards - len(live),
+        mod_shard_jobs=n_shards * (n_shards + 1) // 2,
+        band_bits=r,
     )
     return job_dirs
 

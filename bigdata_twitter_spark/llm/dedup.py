@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, persist_fresh, spread
+from ..tables import drop_hot_groups, load, persist_fresh, spread
 from .params import (  # noqa: F401  (re-exported for compatibility)
     JACCARD_THRESHOLD,
     LSH_BANDS,
@@ -188,17 +188,13 @@ def dedup_fuzzy_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The pair-listing self-join is Σ c·(c−1)/2 over bucket occupancies c,
 # so one degenerate clique (boilerplate, empty docs, canonicalized
 # bags-of-words) makes output and shuffle quadratic in the clique.
-# Buckets above the cap are excluded from PAIR ENUMERATION and counted
-# in LAST_LSH_CAP_AUDIT — never dropped silently.  Contract mirrors
-# sim_pairs_bucketed's HOT_BUCKET_CAP: a >cap bucket means the members
+# Buckets above the cap are excluded from PAIR ENUMERATION, counted
+# and logged by drop_hot_groups — never dropped silently.  Contract
+# mirrors sim_pairs_bucketed's HOT_BUCKET_CAP: a >cap bucket means the members
 # are so mutually similar that pairwise listing is the wrong output
 # shape (dedup_components / dedup_exact resolve such cliques in O(c));
 # fixture scales never reach the cap (max occupancy 4 at sf0.1).
 LSH_HOT_BUCKET_CAP = 500
-
-# Observability for the cap (mirrors bucketed.LAST_CAP_AUDIT): buckets
-# and member rows excluded by the occupancy cap in the MOST RECENT run.
-LAST_LSH_CAP_AUDIT: dict[str, int] = {"dropped_buckets": 0, "dropped_rows": 0}
 
 
 @query(
@@ -216,8 +212,8 @@ LAST_LSH_CAP_AUDIT: dict[str, int] = {"dropped_buckets": 0, "dropped_rows": 0}
         "docs×shingles and partial aggregation reduces it to 32 longs/doc "
         "(the previous explode×32 plan multiplied shuffle input 32×). "
         f"Degenerate cliques: buckets above {LSH_HOT_BUCKET_CAP} members "
-        "are excluded from pair listing with a visible audit "
-        "(LAST_LSH_CAP_AUDIT) — pairwise output on a c-clique is O(c²) "
+        "are excluded from pair listing with a visible audit — "
+        "pairwise output on a c-clique is O(c²) "
         "by definition and belongs to the component/exact-hash "
         "resolvers, keeping this operator's output ∝ true near-dup "
         "pairs, never clique²."
@@ -263,20 +259,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extra exchange of (band, band_sig, partial-count) rows over the
     # r14 plan; identical pairs (a<b over the same capped buckets).
     bands = persist_fresh("lsh_bands", sf_dir, bands)
-    sizes = bands.groupBy("band", "band_sig").agg(
-        F.count("*").alias("occ")
+    bands = drop_hot_groups(
+        "dedup_minhash_lsh", bands, ["band", "band_sig"], LSH_HOT_BUCKET_CAP
     )
-    hot = sizes.filter(F.col("occ") > LSH_HOT_BUCKET_CAP).collect()
-    LAST_LSH_CAP_AUDIT["dropped_buckets"] = len(hot)
-    LAST_LSH_CAP_AUDIT["dropped_rows"] = int(sum(r["occ"] for r in hot))
-    if hot:
-        hot_df = spark.createDataFrame(
-            [(r["band"], r["band_sig"]) for r in hot],
-            sizes.select("band", "band_sig").schema,
-        )
-        bands = bands.join(
-            F.broadcast(hot_df), ["band", "band_sig"], "left_anti"
-        )
     grouped = bands.groupBy("band", "band_sig").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )

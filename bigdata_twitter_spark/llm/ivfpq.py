@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..registry import query
 from .annindex import ensure_versioned_artifact
 from .pq import PQ_SUB, _int_vectors, _sqdist, _sqdist_sql, PQ_SCALE
@@ -46,10 +47,6 @@ IVFPQ_PROBES = 2
 IVFPQ_TOPK = 10
 _SEEDS = IVFPQ_CELLS + IVFPQ_K + IVFPQ_NQ
 _TOPK_BUCKETS = 64
-
-# Physical record of the most recent serve (tests pin the
-# never-retrain contract here).
-LAST_RUN_INFO: dict = {}
 
 
 def ensure_ivfpq_index(
@@ -293,16 +290,14 @@ def embed_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths = {
         p: os.path.join(data_dir, p) for p in ("coarse", "codebook", "codes")
     }
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "op": "serve",
-            "family": "ivfpq",
-            "root": root,
-            "version": version,
-            "rebuilt": rebuilt,
-            "index_files": sorted(paths.values()),
-        }
+    obs.record(
+        "embed_ivfpq_topk",
+        op="serve",
+        family="ivfpq",
+        root=root,
+        version=version,
+        rebuilt=rebuilt,
+        index_files=sorted(paths.values()),
     )
     coarse = spark.read.parquet(paths["coarse"])
     cb = spark.read.parquet(paths["codebook"])

@@ -48,6 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..registry import query
 from ..tables import load
 from .annindex import ensure_versioned_artifact
@@ -60,11 +61,6 @@ PQ_NQ = 5             # query vectors (ranks 17..21 by vec_id)
 PQ_TOPK = 10
 PQ_SCALE = 1_000_000  # int scaling: floor(x*1e6 + 0.5)
 _TOPK_BUCKETS = 64    # two-level top-k fan-in
-
-# Physical record of the most recent serve (tests pin the
-# never-retrain contract here: rebuilt=False + the parquet paths the
-# serve plan actually reads).
-LAST_RUN_INFO: dict = {}
 
 
 def _sqdist_sql(a: str, b: str, dims: int) -> str:
@@ -252,7 +248,7 @@ def ensure_pq_index(
         "Build/serve split (r14): codebook + code table are persisted "
         "versioned artifacts (ensure_pq_index); a query call reads "
         "the committed parquet and NEVER re-trains or re-encodes — "
-        "LAST_RUN_INFO pins the index files the serve plan scans."
+        "its run record pins the index files the serve plan scans."
     ),
 )
 def embed_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,16 +259,16 @@ def embed_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     root, version, rebuilt, data_dir = ensure_pq_index(spark, sf_dir)
     cb_path = os.path.join(data_dir, "codebook")
     codes_path = os.path.join(data_dir, "codes")
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "op": "serve",
-            "family": "pq",
-            "root": root,
-            "version": version,
-            "rebuilt": rebuilt,
-            "index_files": [cb_path, codes_path],
-        }
+    # The never-retrain contract: rebuilt=False plus the parquet paths
+    # the serve plan actually reads.
+    obs.record(
+        "embed_pq_adc_topk",
+        op="serve",
+        family="pq",
+        root=root,
+        version=version,
+        rebuilt=rebuilt,
+        index_files=[cb_path, codes_path],
     )
     cb = spark.read.parquet(cb_path)
     enc = spark.read.parquet(codes_path)

@@ -17,13 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, persist_fresh
+from ..tables import drop_hot_groups, load, persist_fresh
 from .kmeans import TARGET_CLUSTER_SIZE, kmeans_assign_cte
 from .vectors import PAIR_COSINE_THRESHOLD, duck_cosine
-
-import logging
-
-_log = logging.getLogger(__name__)
 
 # Hot-cluster cap, the cluster-keyed analog of bucketed.py's
 # HOT_BUCKET_CAP: k-means targets ~TARGET_CLUSTER_SIZE occupancy, but
@@ -31,11 +27,10 @@ _log = logging.getLogger(__name__)
 # member count in one cluster, and the group-local verifier builds
 # O(k²) matrices per group — so clusters past the cap are EXCLUDED
 # from pair mining (members surface as is_kept=true, n_sem_dups=0),
-# never silently: LAST_CLUSTER_AUDIT records the counts and a warning
+# never silently: drop_hot_groups records the counts and a warning
 # fires, matching the repo's no-silent-caps posture.  The oracle
 # applies the identical cap.
 CLUSTER_CAP = 20 * TARGET_CLUSTER_SIZE
-LAST_CLUSTER_AUDIT: dict[str, int] = {"dropped_clusters": 0, "dropped_rows": 0}
 
 
 def _semdedup_oracle_sql() -> str:
@@ -110,35 +105,10 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Hot-cluster cap (the HOT_BUCKET_CAP analog): cluster sizes are a
-    # K-row aggregate — the audit collects the >cap cluster LIST (same
-    # one job as the old counts-only aggregate; empty on normal
-    # corpora) so the degenerate path can keep-filter BEFORE the
-    # payload shuffle.
-    sizes = assign.groupBy("cluster").agg(F.count("*").alias("occ"))
-    hot = sizes.filter(F.col("occ") > CLUSTER_CAP).collect()
-    LAST_CLUSTER_AUDIT["dropped_clusters"] = len(hot)
-    LAST_CLUSTER_AUDIT["dropped_rows"] = int(sum(r["occ"] for r in hot))
-    mine = assign
-    if hot:
-        _log.warning(
-            "dedup_semantic_cluster: hot-cluster cap (%d) excluded %d "
-            "cluster(s) / %d vector(s) from pair mining; their members "
-            "pass through as is_kept=true — run exact dedup upstream "
-            "if the corpus carries >cap identical vectors",
-            CLUSTER_CAP, len(hot), LAST_CLUSTER_AUDIT["dropped_rows"],
-        )
-        # Audit-guarded keep-filter (VERDICT r14 item 1): a >cap
-        # cluster must never enter the payload shuffle — Arrow
-        # materializes the ENTIRE group (embeddings included) in one
-        # Python worker before the verifier's k>cap early-return can
-        # discard it.  The hot list is ≤ K rows; broadcast-anti-join
-        # it against the assignment before attaching payloads.  The
-        # clean path below stays join-free.
-        hot_df = spark.createDataFrame(
-            [(r["cluster"],) for r in hot],
-            sizes.select("cluster").schema,
-        )
-        mine = assign.join(F.broadcast(hot_df), ["cluster"], "left_anti")
+    # K-row aggregate.
+    mine = drop_hot_groups(
+        "dedup_semantic_cluster", assign, ["cluster"], CLUSTER_CAP
+    )
     # CLUSTER-LOCAL verification (round-4, same fix as bucketed.py):
     # each vector ships once into its cluster group and cosines are
     # computed inside the group — shuffle ∝ n, never ∝ candidate

@@ -17,9 +17,10 @@ using Spark's ``_metadata`` scan columns:
   joins the broadcast sidecar — positions are stable because parquet
   row order within a file is immutable.
 
-:data:`LAST_DV_INFO` records the audit a lakehouse user checks: data
-files present before/after (identical — nothing rewritten), sidecar
-entry count, and sidecar bytes vs table bytes.
+The run record (``obs.last("table_deletion_vectors")``) holds the
+audit a lakehouse user checks: whether the data files present
+before/after are identical (nothing rewritten), and sidecar bytes vs
+table bytes.
 """
 
 from __future__ import annotations
@@ -30,15 +31,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import scratch
+from .. import obs, scratch
 from ..registry import query
 from ..tables import load
 
 DV_DELETE_MOD = 7
 DV_DELETE_RESIDUE = 3
 N_DV_FILES = 8
-
-LAST_DV_INFO: dict = {}
 
 
 @query(
@@ -53,8 +52,8 @@ LAST_DV_INFO: dict = {}
         "Positional deletion vectors (Delta DV / Iceberg positional "
         "deletes): a DELETE writes only (file, row_position) pairs to "
         "a sidecar — bytes ∝ deleted rows, data files untouched "
-        "(LAST_DV_INFO pins identical file sets before/after and the "
-        "sidecar/table byte ratio) — and the read path applies them "
+        "(the run record pins identical file sets before/after and "
+        "the sidecar/table byte ratio) — and the read path applies them "
         "as a LEFT-ANTI join on the broadcast sidecar against the "
         "_metadata scan columns.  Positions are stable because "
         "parquet row order within an immutable file never changes.  "
@@ -101,21 +100,18 @@ def table_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(sidecar)
     )
-    dv = spark.read.parquet(sidecar)
+    dv = spark.read.schema("_file string, _pos bigint").parquet(sidecar)
     files_after = _files()
     side_bytes = sum(
         os.path.getsize(f) for f in glob.glob(os.path.join(sidecar, "*.parquet"))
     )
     base_bytes = sum(os.path.getsize(f) for f in files_before)
-    LAST_DV_INFO.clear()
-    LAST_DV_INFO.update(
-        {
-            "data_files_untouched": files_before == files_after,
-            "n_data_files": len(files_before),
-            "dv_entries": dv.count(),
-            "sidecar_bytes": side_bytes,
-            "base_bytes": base_bytes,
-        }
+    obs.record(
+        "table_deletion_vectors",
+        data_files_untouched=files_before == files_after,
+        n_data_files=len(files_before),
+        sidecar_bytes=side_bytes,
+        base_bytes=base_bytes,
     )
     # Merge-on-read: anti-join the broadcast sidecar at scan time.
     return (

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import scratch
+from .. import obs, scratch
 from ..registry import query
 from ..tables import load
 
@@ -342,8 +342,6 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 MANIFEST_PROBE_USERS = (3, 6)
 N_MANIFEST_FILES = 16
 
-LAST_PRUNE_INFO: dict = {}
-
 
 @query(
     "scan_manifest_pruned",
@@ -364,7 +362,7 @@ LAST_PRUNE_INFO: dict = {}
         "no data read), the planner intersects the probe predicate "
         "with it, and Spark's scan receives ONLY the surviving file "
         "list — the scan's task count is ∝ matching files, not table "
-        "files, before any I/O happens.  LAST_PRUNE_INFO records "
+        "files, before any I/O happens.  The run record holds "
         "files_total vs files_read (pruning pinned in tests).  At "
         "100 TB the manifest is itself a table consulted with a "
         "filter — this operator is that loop in miniature; "
@@ -409,9 +407,8 @@ def scan_manifest_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     lo, hi = MANIFEST_PROBE_USERS
     keep = [fp for fp, fmin, fmax in manifest if fmax >= lo and fmin <= hi]
-    LAST_PRUNE_INFO.clear()
-    LAST_PRUNE_INFO.update(
-        {"files_total": len(manifest), "files_read": len(keep)}
+    obs.record(
+        "scan_manifest_pruned", files_total=len(manifest), files_read=len(keep)
     )
     # Zero surviving files: run the identical aggregation over an
     # empty slice of the base so the schema is the plan's own.
@@ -446,8 +443,6 @@ BLOOM_WORDS = 1024          # 64 Kbit filter per file
 BLOOM_HASHES = 4
 N_BLOOM_FILES = 16
 
-LAST_BLOOM_INFO: dict = {}
-
 
 @query(
     "scan_bloom_pruned",
@@ -475,8 +470,8 @@ LAST_BLOOM_INFO: dict = {}
         "oracle's plain IN over everything; false positives only "
         "cost a read (rate set by bits/key, sized per file in "
         "production).  The deliberately-absent probe key (max+1) "
-        "exercises the all-files-pruned path.  LAST_BLOOM_INFO "
-        "records files_total / files_read / per-probe pass counts."
+        "exercises the all-files-pruned path.  The run record "
+        "holds files_total / files_read / per-probe pass counts."
     ),
 )
 def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,13 +547,11 @@ def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         per_probe[p] = len(passing)
         keep.update(passing)
-    LAST_BLOOM_INFO.clear()
-    LAST_BLOOM_INFO.update(
-        {
-            "files_total": len(blooms),
-            "files_read": len(keep),
-            "per_probe_files": per_probe,
-        }
+    obs.record(
+        "scan_bloom_pruned",
+        files_total=len(blooms),
+        files_read=len(keep),
+        per_probe_files=per_probe,
     )
     src2 = (
         spark.read.parquet(*sorted(keep))
@@ -582,8 +575,6 @@ def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # EACH version's spec.
 EVO_HOURS = (6, 12)       # probe: hours 6..12 of the 5 straddling days
 EVO_SPAN_DAYS = 2         # probe: split±2 days
-
-LAST_EVO_INFO: dict = {}
 
 
 @query(
@@ -614,7 +605,7 @@ LAST_EVO_INFO: dict = {}
         "hours×days-in-range files.  Old files are never rewritten "
         "(the Iceberg contract); the union of the two pruned scans "
         "+ residual filter equals the oracle's plain filter.  "
-        "LAST_EVO_INFO records per-version dirs_total/dirs_read — "
+        "The run record holds per-version dirs_total/dirs_read — "
         "pinned in tests to prove v2 pruned strictly finer.  At "
         "100 TB pruning is metadata-only planning either way."
     ),
@@ -684,14 +675,12 @@ def scan_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             v2_all.append((d, h))
             if in_days(d[4:]) and EVO_HOURS[0] <= int(h[5:]) <= EVO_HOURS[1]:
                 v2_keep.append((d, h))
-    LAST_EVO_INFO.clear()
-    LAST_EVO_INFO.update(
-        {
-            "v1_dirs_total": len(v1_all),
-            "v1_dirs_read": len(v1_keep),
-            "v2_dirs_total": len(v2_all),
-            "v2_dirs_read": len(v2_keep),
-        }
+    obs.record(
+        "scan_partition_evolution",
+        v1_dirs_total=len(v1_all),
+        v1_dirs_read=len(v1_keep),
+        v2_dirs_total=len(v2_all),
+        v2_dirs_read=len(v2_keep),
     )
     sel = F.col("value").isNotNull()  # no-op guard for empty unions
     # Empty-version fallback: e.limit(0), NOT a read of the version

@@ -39,12 +39,6 @@ from ..tables import load
 DELTA_MOD = 4  # every 4th event gets a corrected row in commit 1
 DELTA_BUMP = 50.0  # exact-in-binary value delta (cross-engine safe)
 
-# Physical-layout record of the most recent run (the next call
-# reclaims the working directory), so tests can assert the commit-cost
-# claims — delta file row count, manifest contents — without reading
-# the directory.
-LAST_RUN_INFO: dict = {}
-
 
 class CommitConflict(Exception):
     """Another writer committed this version first (CAS lost)."""
@@ -159,8 +153,7 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta.write.mode("overwrite").parquet(os.path.join(root, "delta1"))
     man_dir = os.path.join(root, "_manifests")
     os.makedirs(man_dir, exist_ok=True)
-    manifests = {0: ["base"], 1: ["base", "delta1"]}
-    for files in manifests.values():
+    for files in (["base"], ["base", "delta1"]):
         commit_next(man_dir, files)
 
     def read_as_of(version: int) -> DataFrame:
@@ -186,15 +179,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(v).alias("version"), "*")
             .collect()[0]
         )
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "manifests": manifests,
-            "delta_rows": spark.read.parquet(
-                os.path.join(root, "delta1")
-            ).count(),
-        }
-    )
     return spark.createDataFrame(
         rows,
         "version int, n_rows bigint, sum_value double, n_from_delta bigint",
@@ -848,8 +832,7 @@ def table_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     man_dir = os.path.join(root, "_manifests")
     os.makedirs(man_dir, exist_ok=True)
     # v2 IS the restore: same file set as v0, committed as new history.
-    manifests = {0: ["base"], 1: ["base", "delta1"], 2: ["base"]}
-    for files in manifests.values():
+    for files in (["base"], ["base", "delta1"], ["base"]):
         commit_next(man_dir, files)
 
     def read_as_of(version: int) -> DataFrame:
@@ -875,14 +858,6 @@ def table_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(v).alias("version"), "*")
             .collect()[0]
         )
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "manifests": manifests,
-            "restore_files_rewritten": 0,  # metadata-only by construction
-            "history_preserved": sorted(manifests),
-        }
-    )
     return spark.createDataFrame(
         rows,
         "version int, n_rows bigint, sum_value double, n_from_delta bigint",
@@ -948,8 +923,7 @@ def table_schema_evolution_versioned(
     delta.write.mode("overwrite").parquet(os.path.join(root, "delta1"))
     man_dir = os.path.join(root, "_manifests")
     os.makedirs(man_dir, exist_ok=True)
-    manifests = {0: ["base"], 1: ["base", "delta1"]}
-    for files in manifests.values():
+    for files in (["base"], ["base", "delta1"]):
         commit_next(man_dir, files)
 
     def read_as_of(version: int) -> DataFrame:
@@ -983,14 +957,6 @@ def table_schema_evolution_versioned(
             .select(F.lit(v).alias("version"), "*")
             .collect()[0]
         )
-    LAST_RUN_INFO.clear()
-    LAST_RUN_INFO.update(
-        {
-            "manifests": manifests,
-            "v0_has_column": False,
-            "v1_null_filled_base_rows": True,
-        }
-    )
     return spark.createDataFrame(
         rows,
         "version int, n_rows bigint, n_scored bigint, sum_score_cents bigint",

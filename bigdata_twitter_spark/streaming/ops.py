@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import scratch
+from .. import obs, scratch
 from ..numerics import dsum, dsum_sql
 from ..registry import query
 from ..tables import load
@@ -177,18 +177,6 @@ class _stream_shuffle:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
 
 
-# The STREAMING-side physical plan of the most recently completed
-# query (microbatch plan of the last executed batch: state stores,
-# watermarks, stream-stream join operators).  The operators return
-# batch DataFrames over their sinks, so without this hook the
-# plan-audit artifact could only show the sink read-back — not the
-# plan that actually carries the state machinery.
-LAST_STREAM_PLAN: str = ""
-
-# stream_upsert_versioned's most recent run layout (test hook).
-LAST_UPSERT_INFO: dict = {}
-
-
 def _await_or_raise(q, timeout: int = 300) -> None:  # noqa: ANN001
     """Fail loudly if a finite replay does not terminate in time —
     otherwise a partial sink would be silently returned as the result."""
@@ -197,11 +185,14 @@ def _await_or_raise(q, timeout: int = 300) -> None:  # noqa: ANN001
         raise TimeoutError(
             f"stream query {q.name or q.id} did not finish within {timeout}s"
         )
-    global LAST_STREAM_PLAN
+    # The microbatch plan of the last executed batch (state stores,
+    # watermarks, stream-stream joins): the operators return batch
+    # DataFrames over their sinks, which cannot show it.
     try:
-        LAST_STREAM_PLAN = q._jsq.explainInternal(False)  # noqa: SLF001
+        plan = q._jsq.explainInternal(False)  # noqa: SLF001
     except Exception:  # pragma: no cover - plan capture must never fail a run
-        LAST_STREAM_PLAN = "(unavailable)"
+        plan = "(unavailable)"
+    obs.record("stream_plan", plan=plan)
 
 
 def _run_to_table(stream_df: DataFrame, mode: str) -> DataFrame:
@@ -827,21 +818,19 @@ def stream_upsert_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _await_or_raise(q)
 
-    # Test hook (mirrors sources/versioned.LAST_RUN_INFO): the run's
-    # physical layout plus the live batch-commit closure, so the
-    # exactly-once replay branch can be exercised directly.
-    LAST_UPSERT_INFO.clear()
-    LAST_UPSERT_INFO.update(
-        {
-            "root": root,
-            "man_dir": man_dir,
-            "write_batch": write_batch,
-            "committed": sorted(committed_files()),
-        }
+    committed = sorted(committed_files())
+    # The live batch-commit closure rides along, so the exactly-once
+    # replay branch can be exercised directly.
+    obs.record(
+        "stream_upsert_versioned",
+        root=root,
+        man_dir=man_dir,
+        write_batch=write_batch,
+        committed=committed,
     )
 
     # Merge-on-read: one keyed aggregate over every committed delta.
-    paths = [os.path.join(root, f) for f in sorted(committed_files())]
+    paths = [os.path.join(root, f) for f in committed]
     log_df = spark.read.schema(
         "user_id bigint, event_id bigint, ts timestamp, value double"
     ).parquet(*paths)

@@ -30,6 +30,7 @@ operator above this module.
 
 from __future__ import annotations
 
+import logging
 import os
 import stat
 
@@ -38,7 +39,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from . import obs
 from .session import configure
+
+_log = logging.getLogger(__name__)
 
 TABLE_NAMES = [
     "region",
@@ -191,6 +195,39 @@ def persist_fresh(tag: str, sf_dir: str, df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSIST_REGISTRY[key] = df
     return df
+
+
+def drop_hot_groups(
+    name: str, df: DataFrame, keys: list[str], cap: int
+) -> DataFrame:
+    """``df`` without its groups by ``keys`` of more than ``cap`` rows.
+
+    The degenerate-input cap of the pair miners (a clique of identical
+    items makes pairwise output quadratic in its size).  One occupancy
+    aggregate collects the over-cap group LIST, which is metadata-sized
+    and empty on normal corpora; ``{"dropped_groups", "dropped_rows"}``
+    is recorded under ``name`` and a warning logged when it is not
+    empty, so the cap is never silent.  Only then is the list broadcast
+    and anti-joined, so a hot group never reaches the payload shuffle
+    (Arrow would materialize it whole in one Python worker) and the
+    clean path stays join-free.
+    """
+    sizes = df.groupBy(*keys).agg(F.count("*").alias("occ"))
+    hot = sizes.filter(F.col("occ") > cap).collect()
+    dropped_rows = sum(r["occ"] for r in hot)
+    obs.record(name, dropped_groups=len(hot), dropped_rows=dropped_rows)
+    if not hot:
+        return df
+    _log.warning(
+        "%s: hot-group cap (%d) dropped %d group(s) / %d row(s) from "
+        "pair mining — run exact dedup upstream if the corpus carries "
+        ">cap identical items",
+        name, cap, len(hot), dropped_rows,
+    )
+    hot_df = df.sparkSession.createDataFrame(
+        [tuple(r[k] for k in keys) for r in hot], sizes.select(*keys).schema
+    )
+    return df.join(F.broadcast(hot_df), keys, "left_anti")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

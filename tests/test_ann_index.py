@@ -23,6 +23,7 @@ import shutil
 
 import pytest
 
+from bigdata_twitter_spark import obs
 from bigdata_twitter_spark.llm import annindex
 from bigdata_twitter_spark.registry import load_all_operators
 
@@ -55,9 +56,9 @@ def own_sf_dir(sf_dir, tmp_path):
 
 def test_build_is_idempotent(spark, own_sf_dir):
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    first = dict(annindex.LAST_RUN_INFO)
+    first = obs.last("ann_index_build")
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    second = dict(annindex.LAST_RUN_INFO)
+    second = obs.last("ann_index_build")
     assert first["version"] == 0
     assert second["version"] == 0
     assert second["rebuilt"] is False
@@ -66,7 +67,7 @@ def test_build_is_idempotent(spark, own_sf_dir):
 
 def test_serve_reads_only_probed_buckets(spark, own_sf_dir):
     rows = SPECS["ann_index_search"].fn(spark, own_sf_dir).collect()
-    info = dict(annindex.LAST_RUN_INFO)
+    info = obs.last("ann_index_search")
     assert rows, "fixture corpus must produce results"
     assert info["op"] == "search"
     n_probed = len(info["probed_dirs"])
@@ -85,7 +86,7 @@ def test_serve_reads_only_probed_buckets(spark, own_sf_dir):
 
 def test_stale_manifest_forces_rebuild_as_next_version(spark, own_sf_dir):
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    root = annindex.LAST_RUN_INFO["root"]
+    root = obs.last("ann_index_build")["root"]
     man = os.path.join(root, "manifests", "v0.json")
     with open(man) as fh:
         manifest = json.load(fh)
@@ -98,14 +99,14 @@ def test_stale_manifest_forces_rebuild_as_next_version(spark, own_sf_dir):
         json.dump(meta, fh)
 
     rows = SPECS["ann_index_search"].fn(spark, own_sf_dir).collect()
-    info = dict(annindex.LAST_RUN_INFO)
+    info = obs.last("ann_index_search")
     assert info["rebuilt"] is True
     assert info["version"] == 1
     assert rows
     # And the rebuilt index is immediately fresh again.
     SPECS["ann_index_search"].fn(spark, own_sf_dir).collect()
-    assert annindex.LAST_RUN_INFO["rebuilt"] is False
-    assert annindex.LAST_RUN_INFO["version"] == 1
+    assert obs.last("ann_index_search")["rebuilt"] is False
+    assert obs.last("ann_index_search")["version"] == 1
 
 
 def test_regenerated_corpus_maps_to_fresh_root(spark, own_sf_dir):
@@ -114,7 +115,7 @@ def test_regenerated_corpus_maps_to_fresh_root(spark, own_sf_dir):
     by content fingerprint, so the regenerated corpus gets a fresh
     root (and rebuilds from v0)."""
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    first = dict(annindex.LAST_RUN_INFO)
+    first = obs.last("ann_index_build")
     # Regenerate in place: rewrite the same bytes; bump mtime.
     p = os.path.join(own_sf_dir, "embeddings.parquet")
     with open(p, "rb") as fh:
@@ -123,7 +124,7 @@ def test_regenerated_corpus_maps_to_fresh_root(spark, own_sf_dir):
         fh.write(payload)
     os.utime(p, ns=(os.stat(p).st_atime_ns, os.stat(p).st_mtime_ns + 10**9))
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    second = dict(annindex.LAST_RUN_INFO)
+    second = obs.last("ann_index_build")
     assert second["root"] != first["root"]
     assert second["rebuilt"] is True
     assert second["version"] == 0
@@ -134,7 +135,7 @@ def test_build_stages_into_unique_dir_named_by_manifest(spark, own_sf_dir):
     data dir (never a deterministic shared path a concurrent loser
     could rmtree)."""
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    root = annindex.LAST_RUN_INFO["root"]
+    root = obs.last("ann_index_build")["root"]
     with open(os.path.join(root, "manifests", "v0.json")) as fh:
         manifest = json.load(fh)
     data_name = manifest["files"][0].split("/", 1)[0]
@@ -155,7 +156,7 @@ def test_serve_is_exact_within_probed_buckets(spark, sf_dir):
         (r.vec_id, r.label, r.cosine)
         for r in SPECS["ann_index_search"].fn(spark, sf_dir).collect()
     ]
-    info = dict(annindex.LAST_RUN_INFO)
+    info = obs.last("ann_index_search")
     probed = pd.concat(
         [
             pd.read_parquet(d).assign(

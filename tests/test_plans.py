@@ -165,11 +165,12 @@ def _stream_plan(spark, sf_dir, key: str) -> str:
     """Execute the finite replay and return the STREAMING-side plan of
     its last microbatch (state machinery lives there, not in the sink
     read-back the operator returns)."""
-    from bigdata_twitter_spark.streaming import ops
+    from bigdata_twitter_spark import obs
 
     SPECS[key].fn(spark, sf_dir).collect()
-    assert ops.LAST_STREAM_PLAN and ops.LAST_STREAM_PLAN != "(unavailable)"
-    return ops.LAST_STREAM_PLAN
+    plan = obs.last("stream_plan")["plan"]
+    assert plan and plan != "(unavailable)"
+    return plan
 
 
 def test_stream_tumbling_agg_state_is_watermark_bounded(spark, sf_dir):
@@ -196,10 +197,10 @@ def test_stream_topk_streaming_layer_is_counts_only(spark, sf_dir):
     watermarked (window, key) counts in a state store; the rank runs
     batch-side over emitted aggregates (a window partitioned by
     window_start — never an unpartitioned global sort)."""
-    from bigdata_twitter_spark.streaming import ops
+    from bigdata_twitter_spark import obs
 
     df = SPECS["stream_topk_per_window"].fn(spark, sf_dir)
-    stream_plan = ops.LAST_STREAM_PLAN
+    stream_plan = obs.last("stream_plan")["plan"]
     assert "StateStoreSave" in stream_plan, stream_plan
     assert "row_number" not in stream_plan, stream_plan  # rank ≠ stream side
     batch_plan = df._jdf.queryExecution().executedPlan().toString()

@@ -19,7 +19,8 @@ import shutil
 
 import pytest
 
-from bigdata_twitter_spark.llm import annindex, ivfpq, pq
+from bigdata_twitter_spark import obs
+from bigdata_twitter_spark.llm import annindex
 from bigdata_twitter_spark.registry import load_all_operators
 
 SPECS = load_all_operators()
@@ -47,17 +48,17 @@ def own_sf_dir(sf_dir, tmp_path):
 
 def test_pq_serve_reuses_persisted_artifact(spark, own_sf_dir):
     SPECS["embed_pq_adc_topk"].fn(spark, own_sf_dir).collect()
-    first = dict(pq.LAST_RUN_INFO)
+    first = obs.last("embed_pq_adc_topk")
     assert first["rebuilt"] is True and first["version"] == 0
     SPECS["embed_pq_adc_topk"].fn(spark, own_sf_dir).collect()
-    second = dict(pq.LAST_RUN_INFO)
+    second = obs.last("embed_pq_adc_topk")
     assert second["rebuilt"] is False
     assert second["index_files"] == first["index_files"]
 
 
 def test_pq_serve_plan_reads_index_files_not_reencode(spark, own_sf_dir):
     df = SPECS["embed_pq_adc_topk"].fn(spark, own_sf_dir)
-    info = dict(pq.LAST_RUN_INFO)
+    info = obs.last("embed_pq_adc_topk")
     read = df.inputFiles()
     for part in ("codebook", "codes"):
         prefix = next(p for p in info["index_files"] if p.endswith(part))
@@ -66,10 +67,10 @@ def test_pq_serve_plan_reads_index_files_not_reencode(spark, own_sf_dir):
 
 def test_ivfpq_serve_reuses_persisted_artifact(spark, own_sf_dir):
     SPECS["embed_ivfpq_topk"].fn(spark, own_sf_dir).collect()
-    first = dict(ivfpq.LAST_RUN_INFO)
+    first = obs.last("embed_ivfpq_topk")
     assert first["rebuilt"] is True and first["version"] == 0
     SPECS["embed_ivfpq_topk"].fn(spark, own_sf_dir).collect()
-    second = dict(ivfpq.LAST_RUN_INFO)
+    second = obs.last("embed_ivfpq_topk")
     assert second["rebuilt"] is False
     assert second["index_files"] == first["index_files"]
     df = SPECS["embed_ivfpq_topk"].fn(spark, own_sf_dir)
@@ -83,11 +84,11 @@ def test_families_coexist_under_one_root(spark, own_sf_dir):
     """pq, ivfpq and the flat IVF index share the fingerprint root
     but keep independent manifests/data dirs."""
     SPECS["embed_pq_adc_topk"].fn(spark, own_sf_dir).collect()
-    pq_info = dict(pq.LAST_RUN_INFO)
+    pq_info = obs.last("embed_pq_adc_topk")
     SPECS["embed_ivfpq_topk"].fn(spark, own_sf_dir).collect()
-    ivfpq_info = dict(ivfpq.LAST_RUN_INFO)
+    ivfpq_info = obs.last("embed_ivfpq_topk")
     SPECS["ann_index_build"].fn(spark, own_sf_dir).collect()
-    ann_info = dict(annindex.LAST_RUN_INFO)
+    ann_info = obs.last("ann_index_build")
     root = pq_info["root"]
     assert ivfpq_info["root"] == root and ann_info["root"] == root
     assert os.path.isdir(os.path.join(root, "manifests"))
@@ -96,4 +97,4 @@ def test_families_coexist_under_one_root(spark, own_sf_dir):
     # Re-serving PQ after the others still reuses (no cross-family
     # manifest interference).
     SPECS["embed_pq_adc_topk"].fn(spark, own_sf_dir).collect()
-    assert pq.LAST_RUN_INFO["rebuilt"] is False
+    assert obs.last("embed_pq_adc_topk")["rebuilt"] is False

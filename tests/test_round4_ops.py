@@ -327,7 +327,11 @@ def test_ann_recall_eval_vs_numpy(specs, spark, sf_dir, emb_pdf):
 
 
 def test_time_travel_commits_and_isolation(specs, spark, sf_dir):
-    from bigdata_twitter_spark.sources.versioned import LAST_RUN_INFO
+    import glob
+    import json
+    import os
+
+    from bigdata_twitter_spark import scratch
 
     out = (
         specs["table_time_travel"].fn(spark, sf_dir).toPandas()
@@ -343,9 +347,16 @@ def test_time_travel_commits_and_isolation(specs, spark, sf_dir):
         50.0 * out.loc[1].n_from_delta, abs=1e-6
     )
     # Commit cost is O(delta): the delta commit wrote only the
-    # corrected rows; the base snapshot was not rewritten.
-    assert LAST_RUN_INFO["delta_rows"] == out.loc[1].n_from_delta
-    assert LAST_RUN_INFO["manifests"] == {0: ["base"], 1: ["base", "delta1"]}
+    # corrected rows; v1 references the same, unrewritten base.
+    root = scratch.path("events_mor")
+    delta_rows = spark.read.parquet(os.path.join(root, "delta1")).count()
+    assert delta_rows == out.loc[1].n_from_delta
+    manifests = {}
+    for f in glob.glob(os.path.join(root, "_manifests", "v*.json")):
+        with open(f) as fh:
+            m = json.load(fh)
+        manifests[m["version"]] = m["files"]
+    assert manifests == {0: ["base"], 1: ["base", "delta1"]}
 
 
 def test_time_travel_two_writer_race_loses_no_update(tmp_path):
@@ -426,17 +437,22 @@ def test_train_pipeline_composes_stage_operators(specs, spark, sf_dir, docs_pdf)
     assert out.n_docs.max() - out.n_docs.min() <= 1
 
 
-def test_semdedup_cluster_cap_fires_visibly(specs, spark, sf_dir, monkeypatch):
+def test_semdedup_cluster_cap_fires_visibly(
+    specs, spark, sf_dir, monkeypatch, caplog
+):
     """A >cap cluster must be excluded from pair mining AND counted in
-    LAST_CLUSTER_AUDIT — never silently (same contract as the LSH
-    hot-bucket cap)."""
+    the run record and logged — never silently (same contract as the
+    LSH hot-bucket cap)."""
+    from bigdata_twitter_spark import obs
     from bigdata_twitter_spark.llm import semdedup as sd
 
     monkeypatch.setattr(sd, "CLUSTER_CAP", 10)  # every cluster oversized
     hot_df = specs["dedup_semantic_cluster"].fn(spark, sf_dir)
     out = hot_df.toPandas()
-    assert sd.LAST_CLUSTER_AUDIT["dropped_clusters"] > 0
-    assert sd.LAST_CLUSTER_AUDIT["dropped_rows"] == len(out)
+    audit = obs.last("dedup_semantic_cluster")
+    assert audit["dropped_groups"] > 0
+    assert audit["dropped_rows"] == len(out)
+    assert "dedup_semantic_cluster: hot-group cap" in caplog.text
     # Excluded members mine no pairs: all pass through as kept.
     assert out.is_kept.all() and (out.n_sem_dups == 0).all()
     # VERDICT r14 item 1: hot clusters are keep-filtered BEFORE the
@@ -446,9 +462,13 @@ def test_semdedup_cluster_cap_fires_visibly(specs, spark, sf_dir, monkeypatch):
     # The real cap does not fire at fixture scale, and the audit resets;
     # the clean path stays join-free (no anti-join on normal corpora).
     monkeypatch.undo()
+    caplog.clear()
     clean_df = specs["dedup_semantic_cluster"].fn(spark, sf_dir)
     clean_df.count()
-    assert sd.LAST_CLUSTER_AUDIT == {"dropped_clusters": 0, "dropped_rows": 0}
+    assert obs.last("dedup_semantic_cluster") == {
+        "dropped_groups": 0, "dropped_rows": 0
+    }
+    assert "hot-group cap" not in caplog.text
     assert (
         "LeftAnti"
         not in clean_df._jdf.queryExecution().executedPlan().toString()

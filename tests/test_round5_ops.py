@@ -116,13 +116,13 @@ def test_stream_upsert_versioned_exactly_once_replay(specs, spark, sf_dir):
     commit + at-least-once = exactly-once."""
     import json
 
-    from bigdata_twitter_spark.streaming.ops import LAST_UPSERT_INFO
+    from bigdata_twitter_spark import obs
 
     first = (
         specs["stream_upsert_versioned"].fn(spark, sf_dir)
         .toPandas().sort_values("user_id").reset_index(drop=True)
     )
-    info = dict(LAST_UPSERT_INFO)
+    info = obs.last("stream_upsert_versioned")
     man_dir, committed = info["man_dir"], info["committed"]
     versions = sorted(
         int(f[1:-5]) for f in os.listdir(man_dir) if f.endswith(".json")

@@ -29,7 +29,7 @@ def test_bucket_jobs_equals_exact_miner_and_runs_linear_jobs(
 ):
     """Same pair set (ids AND 6dp cosines) as the exact all-pairs
     miner, with ≤ S jobs on disk where mod-sharding needs S(S+1)/2."""
-    from bigdata_twitter_spark import scratch
+    from bigdata_twitter_spark import obs, scratch
     from bigdata_twitter_spark.llm import bucketjobs as bj
 
     mined = {
@@ -42,7 +42,7 @@ def test_bucket_jobs_equals_exact_miner_and_runs_linear_jobs(
     }
     assert mined == exact
     assert mined, "fixture should contain pairs at the threshold"
-    audit = bj.LAST_JOB_AUDIT
+    audit = obs.last("sim_pairs_bucket_jobs")
     assert audit["shards"] == bj.BUCKET_JOB_SHARDS
     assert audit["jobs_run"] <= bj.BUCKET_JOB_SHARDS
     assert audit["mod_shard_jobs"] == (
@@ -59,18 +59,17 @@ def test_bucket_jobs_job_count_measured_linear_in_shard_count(
     (cross-shard jobs never materialize) while the mod-shard loop's
     job count grows as S(S+1)/2 — and the mined pair set is invariant
     in S (sharding partitions buckets, never drops one)."""
-    from bigdata_twitter_spark.llm.bucketjobs import (
-        LAST_JOB_AUDIT,
-        run_bucket_jobs,
-    )
+    from bigdata_twitter_spark import obs
+    from bigdata_twitter_spark.llm.bucketjobs import run_bucket_jobs
 
     pair_sets = []
     for s_count in (2, 4, 8, 16):
         run_dir = str(tmp_path / f"s{s_count}")
         os.makedirs(run_dir)
         job_dirs = run_bucket_jobs(spark, sf_dir, run_dir, s_count)
-        assert LAST_JOB_AUDIT["jobs_run"] == len(job_dirs) <= s_count
-        assert LAST_JOB_AUDIT["mod_shard_jobs"] == (
+        audit = obs.last("sim_pairs_bucket_jobs")
+        assert audit["jobs_run"] == len(job_dirs) <= s_count
+        assert audit["mod_shard_jobs"] == (
             s_count * (s_count + 1) // 2
         )
         pair_sets.append(
@@ -466,10 +465,10 @@ def test_deletion_vectors_never_rewrite_data_files(specs, spark, sf_dir):
     byte-identical (same file set), the sidecar carries exactly the
     deleted positions, and sidecar bytes ≪ table bytes — the
     O(deleted) not O(table) property deletion vectors exist for."""
+    from bigdata_twitter_spark import obs, scratch
     from bigdata_twitter_spark.sources.deletionvectors import (
         DV_DELETE_MOD,
         DV_DELETE_RESIDUE,
-        LAST_DV_INFO,
     )
     from bigdata_twitter_spark.tables import load
 
@@ -481,12 +480,14 @@ def test_deletion_vectors_never_rewrite_data_files(specs, spark, sf_dir):
         f"event_id % {DV_DELETE_MOD} = {DV_DELETE_RESIDUE}"
     ).count()
     assert n_deleted > 0 and survivors == n_total - n_deleted
-    assert LAST_DV_INFO["data_files_untouched"]
-    assert LAST_DV_INFO["dv_entries"] == n_deleted
+    info = obs.last("table_deletion_vectors")
+    assert info["data_files_untouched"]
+    sidecar = scratch.path(f"dv_sidecar_{scratch.tag(sf_dir)}")
+    assert spark.read.parquet(sidecar).count() == n_deleted
     # O(deleted) not O(table): sidecar cost is a bounded number of
     # bytes PER DELETED ROW (a table-size ratio is meaningless at toy
     # scale, where parquet per-file overhead dominates both sides).
-    assert LAST_DV_INFO["sidecar_bytes"] / n_deleted <= 64
+    assert info["sidecar_bytes"] / n_deleted <= 64
 
 
 def test_manifest_pruning_reads_fraction_of_files(specs, spark, sf_dir):
@@ -496,20 +497,19 @@ def test_manifest_pruning_reads_fraction_of_files(specs, spark, sf_dir):
     a direct computation to keep the invariant local)."""
     from pyspark.sql import functions as F
 
-    from bigdata_twitter_spark.sources.layout import (
-        LAST_PRUNE_INFO,
-        MANIFEST_PROBE_USERS,
-    )
+    from bigdata_twitter_spark import obs
+    from bigdata_twitter_spark.sources.layout import MANIFEST_PROBE_USERS
     from bigdata_twitter_spark.tables import load
 
     got = {
         r["user_id"]: r["n"]
         for r in specs["scan_manifest_pruned"].fn(spark, sf_dir).collect()
     }
-    assert LAST_PRUNE_INFO["files_total"] >= 8
+    info = obs.last("scan_manifest_pruned")
+    assert info["files_total"] >= 8
     # strict pruning; at fixture scale the probe touches ≤ half the
     # files (16→1 at sf0.01; user cardinality bounds it at sf0.001)
-    assert LAST_PRUNE_INFO["files_read"] <= LAST_PRUNE_INFO["files_total"] // 2
+    assert info["files_read"] <= info["files_total"] // 2
     want = {
         r["user_id"]: r["n"]
         for r in load(spark, sf_dir, "events")

@@ -29,6 +29,20 @@ def specs():
     return load_all_operators()
 
 
+def _committed_manifests(root: str) -> dict[int, list[str]]:
+    """{version: files} of every manifest committed under ``root``."""
+    import glob
+    import json
+    import os
+
+    out = {}
+    for f in glob.glob(os.path.join(root, "_manifests", "v*.json")):
+        with open(f) as fh:
+            m = json.load(fh)
+        out[m["version"]] = m["files"]
+    return out
+
+
 def _py_tokens(text: str) -> list[str]:
     return [t for t in text.lower().split(" ") if t]
 
@@ -733,12 +747,13 @@ def test_bloom_pruning_reads_fewer_files_no_false_negatives(
     pass ≥1 file, files_read < files_total), results equal the plain
     lookup, and no false negative is possible (every present probe's
     rows are returned)."""
+    from bigdata_twitter_spark import obs
     from bigdata_twitter_spark.sources import layout
     from bigdata_twitter_spark.tables import load
     from pyspark.sql import functions as F
 
     rows = specs["scan_bloom_pruned"].fn(spark, sf_dir).collect()
-    info = dict(layout.LAST_BLOOM_INFO)
+    info = obs.last("scan_bloom_pruned")
     assert info["files_total"] == layout.N_BLOOM_FILES
     assert 1 <= info["files_read"] < info["files_total"]
     e = load(spark, sf_dir, "events")
@@ -960,10 +975,11 @@ def test_partition_evolution_prunes_each_spec_at_its_grain(
     """scan_partition_evolution: v1 (day spec) reads only the
     straddling days; v2 (day/hour spec) reads strictly fewer dirs per
     day than v1 would (hour pruning happened at planning time)."""
+    from bigdata_twitter_spark import obs
     from bigdata_twitter_spark.sources import layout
 
     specs["scan_partition_evolution"].fn(spark, sf_dir).collect()
-    info = dict(layout.LAST_EVO_INFO)
+    info = obs.last("scan_partition_evolution")
     # v1 half holds ~15 day dirs; only the ≤ split..split+? straddle
     # intersects (≤ EVO_SPAN_DAYS of them are v1-side days).
     assert 1 <= info["v1_dirs_read"] <= layout.EVO_SPAN_DAYS
@@ -2574,7 +2590,9 @@ def test_skyline_matches_naive_python(specs, spark, sf_dir):
 
 def test_restore_version_semantics(specs, spark, sf_dir):
     """table_restore_version: v2 == v0 exactly, v1 differs, metadata-only."""
-    from bigdata_twitter_spark.sources import versioned as V
+    import os
+
+    from bigdata_twitter_spark import scratch
 
     rows = {
         r["version"]: r
@@ -2589,10 +2607,13 @@ def test_restore_version_semantics(specs, spark, sf_dir):
     # the bad version differs and stays readable (history preserved)
     assert v1["sum_value"] != v0["sum_value"]
     assert v1["n_from_delta"] > 0
-    info = V.LAST_RUN_INFO
-    assert info["restore_files_rewritten"] == 0
-    assert info["manifests"][2] == info["manifests"][0]
-    assert info["history_preserved"] == [0, 1, 2]
+    root = scratch.path("events_restore")
+    manifests = _committed_manifests(root)
+    assert sorted(manifests) == [0, 1, 2]
+    assert manifests[2] == manifests[0]
+    # metadata-only: the restore commit wrote no data dir
+    data_dirs = sorted(d for d in os.listdir(root) if d != "_manifests")
+    assert data_dirs == ["base", "delta1"]
 
 
 # ---- HHI + Zipf + audio ZCR (round-7 continuation) ---------------------
@@ -3241,8 +3262,9 @@ def test_cohort_ltv_matches_python(specs, spark, sf_dir):
 def test_schema_evolution_versioned_semantics(specs, spark, sf_dir):
     """table_schema_evolution_versioned: v0 untouched, v1 null-fills."""
     import math
+    import os
 
-    from bigdata_twitter_spark.sources import versioned as V
+    from bigdata_twitter_spark import scratch
     from bigdata_twitter_spark.tables import load
 
     events = load(spark, sf_dir, "events").select(
@@ -3263,9 +3285,13 @@ def test_schema_evolution_versioned_semantics(specs, spark, sf_dir):
     assert rows[0]["n_scored"] == 0 and rows[0]["sum_score_cents"] == 0
     assert rows[1]["n_scored"] == len(scored)
     assert rows[1]["sum_score_cents"] == want_sum
-    info = V.LAST_RUN_INFO
-    assert info["v0_has_column"] is False
-    assert info["v1_null_filled_base_rows"] is True
+    # v0's files never carry the new column; only v1's delta does, so
+    # v1's base rows resolve to NULL (n_scored < n_rows above).
+    root = scratch.path("events_evolve")
+    assert _committed_manifests(root) == {0: ["base"], 1: ["base", "delta1"]}
+    base = spark.read.parquet(os.path.join(root, "base")).columns
+    delta = spark.read.parquet(os.path.join(root, "delta1")).columns
+    assert "score_cents" not in base and "score_cents" in delta
 
 
 def test_stream_distinct_users_matches_batch(specs, spark, sf_dir):

@@ -532,10 +532,13 @@ def test_kmeans_two_tier_matches_numpy(spark, tmp_path, monkeypatch):
     assert max(sizes.values()) <= 8 * km.TARGET_CLUSTER_SIZE
 
 
-def test_hot_bucket_cap_fires_visibly(spark, tmp_path, monkeypatch):
+def test_hot_bucket_cap_fires_visibly(
+    spark, tmp_path, monkeypatch, caplog
+):
     """A >cap group of identical vectors must (a) lose its pairs — the
-    documented contract — and (b) be COUNTED in LAST_CAP_AUDIT, never
-    dropped silently; normal corpora must report zero drops."""
+    documented contract — and (b) be COUNTED in the run record and
+    logged, never dropped silently; normal corpora report zero drops."""
+    from bigdata_twitter_spark import obs
     from bigdata_twitter_spark.llm import bucketed as bk
 
     n_dup, n_ok = 12, 6
@@ -562,10 +565,13 @@ def test_hot_bucket_cap_fires_visibly(spark, tmp_path, monkeypatch):
     # so none of its pairs can be mined ...
     assert not any(a < n_dup and b < n_dup for a, b in pairs), pairs
     # ... and the audit must say exactly that.
-    assert bk.LAST_CAP_AUDIT["dropped_buckets"] > 0
-    assert bk.LAST_CAP_AUDIT["dropped_rows"] >= n_dup
+    audit = obs.last("sim_pairs_bucketed")
+    assert audit["dropped_groups"] > 0
+    assert audit["dropped_rows"] >= n_dup
+    assert "sim_pairs_bucketed: hot-group cap" in caplog.text
     # Cap off again: pairs return and the audit resets to zero; the
     # clean path stays join-free (no anti-join on normal corpora).
+    caplog.clear()
     monkeypatch.setattr(bk, "HOT_BUCKET_CAP", 10_000)
     got = bk.sim_pairs_bucketed(spark, sf_dir)
     assert (
@@ -573,7 +579,10 @@ def test_hot_bucket_cap_fires_visibly(spark, tmp_path, monkeypatch):
     )
     pairs = {(r["a_id"], r["b_id"]) for r in got.collect()}
     assert {(a, b) for a in range(n_dup) for b in range(a + 1, n_dup)} <= pairs
-    assert bk.LAST_CAP_AUDIT == {"dropped_buckets": 0, "dropped_rows": 0}
+    assert obs.last("sim_pairs_bucketed") == {
+        "dropped_groups": 0, "dropped_rows": 0
+    }
+    assert "hot-group cap" not in caplog.text
 
 
 def test_round6_parity_spark_vs_python_emulation(spark):
@@ -605,12 +614,15 @@ def test_round6_parity_spark_vs_python_emulation(spark):
         assert py == row["r6"], (row["x"].hex(), py, row["r6"])
 
 
-def test_lsh_hot_bucket_cap_fires_visibly(spark, tmp_path, monkeypatch):
+def test_lsh_hot_bucket_cap_fires_visibly(
+    spark, tmp_path, monkeypatch, caplog
+):
     """A degenerate near-identical clique above the occupancy cap must
     (a) lose its pairwise listing — the documented contract; pairwise
     output on a c-clique is O(c²) and belongs to dedup_components —
-    and (b) be COUNTED in LAST_LSH_CAP_AUDIT, never dropped silently;
-    normal corpora must report zero drops."""
+    and (b) be COUNTED in the run record and logged, never dropped
+    silently; normal corpora must report zero drops."""
+    from bigdata_twitter_spark import obs
     from bigdata_twitter_spark.llm import dedup as dd
 
     n_dup, n_ok = 10, 4
@@ -633,10 +645,13 @@ def test_lsh_hot_bucket_cap_fires_visibly(spark, tmp_path, monkeypatch):
     # The clique shares EVERY band bucket at >cap occupancy: no pairs...
     assert not any(a < n_dup and b < n_dup for a, b in got), got
     # ...and the audit says exactly that.
-    assert dd.LAST_LSH_CAP_AUDIT["dropped_buckets"] > 0
-    assert dd.LAST_LSH_CAP_AUDIT["dropped_rows"] >= n_dup
+    audit = obs.last("dedup_minhash_lsh")
+    assert audit["dropped_groups"] > 0
+    assert audit["dropped_rows"] >= n_dup
+    assert "dedup_minhash_lsh: hot-group cap" in caplog.text
     # Cap off again: the clique pairs return, audit resets to zero;
     # the clean path stays anti-join-free.
+    caplog.clear()
     monkeypatch.setattr(dd, "LSH_HOT_BUCKET_CAP", 10_000)
     clean_df = dd.dedup_minhash_lsh(spark, sf_dir)
     assert (
@@ -645,7 +660,10 @@ def test_lsh_hot_bucket_cap_fires_visibly(spark, tmp_path, monkeypatch):
     )
     got = _pairs(clean_df)
     assert {(a, b) for a in range(n_dup) for b in range(a + 1, n_dup)} <= got
-    assert dd.LAST_LSH_CAP_AUDIT == {"dropped_buckets": 0, "dropped_rows": 0}
+    assert obs.last("dedup_minhash_lsh") == {
+        "dropped_groups": 0, "dropped_rows": 0
+    }
+    assert "hot-group cap" not in caplog.text
 
 
 def test_embedding_oracle_regime_guard_fires_past_exact_max(

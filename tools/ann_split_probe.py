@@ -13,8 +13,8 @@ IVF index AND the two quantized artifacts added in r14:
 3. time each family's BUILD once (ensure_index / ensure_pq_index /
    ensure_ivfpq_index — the corpus-sized pass);
 4. time the corresponding SERVE best-of-2 (reads the committed
-   artifact; never re-trains — LAST_RUN_INFO.rebuilt is asserted
-   False on both serve runs).
+   artifact; never re-trains — the serve key's run record is asserted
+   ``rebuilt=False`` on both serve runs).
 
 Usage: ``python tools/ann_split_probe.py [copies]`` (default 10).
 Prints ONE JSON line with build/serve seconds per family at base sf
@@ -36,6 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe import build  # noqa: E402  (tools/scale_probe.py)
 
+from bigdata_twitter_spark import obs  # noqa: E402
 from bigdata_twitter_spark.llm import annindex, ivfpq, pq  # noqa: E402
 from bigdata_twitter_spark.registry import load_all_operators  # noqa: E402
 from bigdata_twitter_spark.session import get_session  # noqa: E402
@@ -55,11 +56,11 @@ def probe(spark, specs, sf_dir: str) -> dict:
     rm_roots(sf_dir)
     out: dict = {}
     fams = [
-        ("ivf", annindex.ensure_index, "ann_index_search", annindex),
-        ("pq", pq.ensure_pq_index, "embed_pq_adc_topk", pq),
-        ("ivfpq", ivfpq.ensure_ivfpq_index, "embed_ivfpq_topk", ivfpq),
+        ("ivf", annindex.ensure_index, "ann_index_search"),
+        ("pq", pq.ensure_pq_index, "embed_pq_adc_topk"),
+        ("ivfpq", ivfpq.ensure_ivfpq_index, "embed_ivfpq_topk"),
     ]
-    for fam, ensure, serve_key, mod in fams:
+    for fam, ensure, serve_key in fams:
         t0 = time.perf_counter()
         _, _, rebuilt, _ = ensure(spark, sf_dir)
         out[f"{fam}_build"] = round(time.perf_counter() - t0, 2)
@@ -69,7 +70,7 @@ def probe(spark, specs, sf_dir: str) -> dict:
             t0 = time.perf_counter()
             specs[serve_key].fn(spark, sf_dir).collect()
             best = min(best, time.perf_counter() - t0)
-            assert mod.LAST_RUN_INFO["rebuilt"] is False, (
+            assert obs.last(serve_key)["rebuilt"] is False, (
                 f"{fam}: serve must reuse the committed artifact"
             )
         out[f"{fam}_serve"] = round(best, 2)

@@ -125,13 +125,13 @@ def main() -> None:
         seen.add(key)
         emit(key, batch_plan(specs[key].fn(spark, sf_dir)))
 
-    from bigdata_twitter_spark.streaming import ops as stream_ops
+    from bigdata_twitter_spark import obs
 
     for key in HEADLINE_STREAMING:
         if key not in specs:
             continue
         df = specs[key].fn(spark, sf_dir)  # executes the finite replay
-        emit(key, stream_ops.LAST_STREAM_PLAN, " (streaming plan)")
+        emit(key, obs.last("stream_plan")["plan"], " (streaming plan)")
         emit(key, batch_plan(df), " (sink read-back plan)")
 
     path = os.path.join(REPO, f"PLANS_r{rnd:02d}.md")
