@@ -64,7 +64,7 @@ from pyspark.sql.types import (
 
 from .. import obs
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 from ..sources.versioned import CommitConflict, commit_version
 from .ivf import _CENTROID_SQL, ivf_index
 from .vectors import duck_cosine, spark_cosine
@@ -340,7 +340,7 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     if not bucket_dirs:  # empty corpus: no bucket files were written
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return (
         spark.read.option("basePath", buckets_dir)
         .parquet(*bucket_dirs)
@@ -462,7 +462,7 @@ def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_dirs_total=len(all_buckets),
     )
     if not probed:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     cand = spark.read.option("basePath", buckets_dir).parquet(*probed)
     return (

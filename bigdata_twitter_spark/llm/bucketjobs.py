@@ -42,7 +42,13 @@ from pyspark.sql import functions as F
 
 from .. import obs, scratch
 from ..registry import query
-from ..tables import load, persist_fresh, spread
+from ..tables import (
+    load,
+    local_frame,
+    log_hot_groups,
+    persist_fresh,
+    spread,
+)
 from .bucketed import (
     HOT_BUCKET_CAP,
     PLANES,
@@ -90,9 +96,12 @@ def run_bucket_jobs(
     never materialize.  A shard owning no minable bucket (occupancy
     outside [2, cap]) is skipped entirely; the skip is recorded under
     ``"sim_pairs_bucket_jobs"`` (with the jobs mod-sharding would have
-    run and the jobs this loop ran), never silent.  Resume semantics are
-    orchestration.run_shard_jobs's: _SUCCESS-marked jobs are skipped,
-    torn jobs overwritten."""
+    run and the jobs this loop ran), never silent.  So are the buckets
+    over the hot cap: their count and rows are recorded as
+    ``dropped_groups``/``dropped_rows`` and logged, as
+    ``tables.drop_hot_groups`` does for the single-job miners.  Resume
+    semantics are orchestration.run_shard_jobs's: _SUCCESS-marked jobs
+    are skipped, torn jobs overwritten."""
     e = load(spark, sf_dir, "embeddings")
     r = bits_for(e.count())
     if r > ORACLE_BITS_MAX and os.environ.get(EXPECT_EXACT_ORACLE_ENV):
@@ -108,19 +117,33 @@ def run_bucket_jobs(
     # Persisted: consumed by the sizes aggregate AND every job's join.
     bands = persist_fresh("srp_bands_jobs", sf_dir, bands)
     sizes = bands.groupBy("band", "bval").agg(F.count("*").alias("occ"))
-    # Minable buckets (≥2 members, ≤ hot cap) with their owning shard.
-    minable = sizes.filter(
-        (F.col("occ") >= 2) & (F.col("occ") <= HOT_BUCKET_CAP)
-    ).select(
+    # Buckets with ≥2 members and their owning shard; those over the
+    # hot cap stay in, flagged, so the one summary read below also
+    # counts what the cap drops.
+    minable = sizes.filter(F.col("occ") >= 2).select(
         "band",
         "bval",
+        "occ",
+        (F.col("occ") > HOT_BUCKET_CAP).alias("hot"),
         ((F.col("band") * (1 << r) + F.col("bval")) % n_shards).alias("shard"),
     )
     minable = persist_fresh("srp_minable_jobs", sf_dir, minable)
-    # ≤ n_shards rows after distinct — metadata-sized driver read.
-    live = sorted(
-        row["shard"] for row in minable.select("shard").distinct().collect()
+    # ≤ 2 × n_shards rows — metadata-sized driver read.
+    summary = (
+        minable.groupBy("shard", "hot")
+        .agg(F.count("*").alias("groups"), F.sum("occ").alias("rows"))
+        .collect()
     )
+    live = sorted(row["shard"] for row in summary if not row["hot"])
+    dropped_groups = sum(row["groups"] for row in summary if row["hot"])
+    dropped_rows = sum(row["rows"] for row in summary if row["hot"])
+    if dropped_groups:
+        log_hot_groups(
+            "sim_pairs_bucket_jobs",
+            HOT_BUCKET_CAP,
+            dropped_groups,
+            dropped_rows,
+        )
     vecs = e.select("vec_id", "embedding")
     job_dirs: list[str] = []
     for s in live:
@@ -128,11 +151,13 @@ def run_bucket_jobs(
         job_dirs.append(job_dir)
         if os.path.exists(os.path.join(job_dir, "_SUCCESS")):
             continue  # completed job: never recomputed
-        keep = minable.filter(F.col("shard") == s).select("band", "bval")
+        keep = minable.filter((F.col("shard") == s) & ~F.col("hot")).select(
+            "band", "bval"
+        )
         rows = bands.join(F.broadcast(keep), ["band", "bval"]).join(
             vecs, "vec_id"
         )
-        # Groups are pre-capped by the ``minable`` filter above, so the
+        # Groups are pre-capped by the ``hot`` flag above, so the
         # verifier's group-local cap never fires here; built at call
         # time so a monkeypatched cap stays consistent with the filter.
         pairs = rows.groupBy("band", "bval").applyInPandas(
@@ -147,6 +172,8 @@ def run_bucket_jobs(
         shards_skipped_empty=n_shards - len(live),
         mod_shard_jobs=n_shards * (n_shards + 1) // 2,
         band_bits=r,
+        dropped_groups=dropped_groups,
+        dropped_rows=dropped_rows,
     )
     return job_dirs
 
@@ -231,7 +258,7 @@ def sim_pairs_bucket_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     job_dirs = run_bucket_jobs(spark, sf_dir, run_dir, BUCKET_JOB_SHARDS)
     schema = "a_id long, b_id long, cosine double"
     if not job_dirs:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # A true pair collides in several bands, possibly in buckets owned
     # by DIFFERENT shards; rows are identical (deterministic cosine),
     # so one aggregate-sized distinct over the union dedups.

@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import drop_hot_groups, load, persist_fresh, spread
+from ..tables import (
+    drop_hot_groups,
+    load,
+    local_frame,
+    persist_fresh,
+    spread,
+)
 from .params import (  # noqa: F401  (re-exported for compatibility)
     JACCARD_THRESHOLD,
     LSH_BANDS,
@@ -714,7 +720,8 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hit = truth.join(cand, ["a_id", "b_id"]).count()
     recall = 1.0 if n_true == 0 else float(n_hit) / float(n_true)
     prec = 1.0 if n_cand == 0 else float(n_hit) / float(n_cand)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_true, n_cand, n_hit, recall, prec)],
         "n_true bigint, n_cand bigint, n_hit bigint, "
         "recall double, precision_at_tau double",

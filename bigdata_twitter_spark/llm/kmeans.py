@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 K_MIN = 8
 K_MAX = 128  # per-TIER clamp (codegen-literal + broadcast-array bound)
@@ -352,7 +352,8 @@ def _kmeans_two_tier(
         }
 
         def cent_tbl() -> DataFrame:
-            df = spark.createDataFrame(
+            df = local_frame(
+                spark,
                 [(c, s, v) for (c, s), v in model.items()],
                 "cell int, sub int, c array<double>",
             )

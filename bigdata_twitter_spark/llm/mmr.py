@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, persist_fresh
+from ..tables import load, local_frame, persist_fresh
 from .vectors import duck_cosine, spark_cosine
 
 MMR_QUERY_ID = 0
@@ -209,7 +209,8 @@ def embed_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
             (k, r["vec_id"], float(r["rel"]), float(r["score"]), r["embedding"])
         )
     id_type = dict(pool.dtypes)["vec_id"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(rk, vid, rel, sc) for rk, vid, rel, sc, _ in rows],
         f"rank int, vec_id {id_type}, relevance double, mmr_score double",
     )

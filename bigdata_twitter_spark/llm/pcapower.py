@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 DIM = 64
 SHIFT = 16  # fraction bits: floor(x * 2^16 + 0.5), exact scaling
@@ -251,9 +251,7 @@ def embed_pca_power_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()  # ONE metadata-sized row (n + 64 + 4096 ints).
     n = folded["n"]
     if not n or n < 2:
-        return spark.createDataFrame(
-            [], "vec_id bigint, label int, pc1 double"
-        )
+        return local_frame(spark, [], "vec_id bigint, label int, pc1 double")
     v = power_iterate(n, folded["s"], folded["g"])
     mu = [float(si) / n for si in folded["s"]]  # quantized-unit means
     q_expr = (

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 # 2^16 bits = 1024 64-bit words.  With k=3 hashes and ~600 dim keys at
 # sf0.1 the load factor is ~0.03 ⇒ FPR ~2e-5; at sf1 ~0.3 ⇒ FPR ~2e-3.
@@ -127,7 +127,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment") == "BUILDING"
     )
     bitmap = bloom_bitmap(c.select("c_custkey"), "c_custkey")
-    bf_df = spark.createDataFrame([(bitmap,)], "bf array<bigint>")
+    bf_df = local_frame(spark, [(bitmap,)], "bf array<bigint>")
     pruned = prune_by_bloom(o.crossJoin(F.broadcast(bf_df)), "o_custkey").drop(
         "bf"
     )

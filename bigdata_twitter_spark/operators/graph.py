@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..registry import query
-from ..tables import load, persist_fresh
+from ..tables import load, local_frame, persist_fresh
 
 PART_OFFSET = 1_000_000_000
 DAMPING = 0.85
@@ -478,9 +478,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges(spark, sf_dir).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    frontier = spark.createDataFrame(
-        [(KHOP_SOURCE,)], "v bigint"
-    )
+    frontier = local_frame(spark, [(KHOP_SOURCE,)], "v bigint")
     layers = [frontier.withColumn("h", F.lit(0))]
     for k in range(1, KHOP_K + 1):
         frontier = (

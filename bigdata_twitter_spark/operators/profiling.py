@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 # Profiled columns of the events table.  All profile metrics are
 # BIGINT counts — engine-neutral by construction (no float/timestamp
@@ -507,7 +507,7 @@ def agg_percentile_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = h.withColumn("cc", F.sum("c").over(wcum).cast("bigint"))
-    ps = spark.createDataFrame([(50,), (90,), (99,)], "p int")
+    ps = local_frame(spark, [(50,), (90,), (99,)], "p int")
     pick = (
         cum.join(F.broadcast(ps))
         .filter(F.col("cc") >= F.expr("(n * p + 99) div 100"))

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..numerics import wide_dbl_sql
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 # Keep 2 of 16 md5 first-nibble buckets ⇒ a deterministic 12.5% sample.
 SAMPLE_NIBBLES = ("0", "1")
@@ -715,8 +715,8 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "bucket")
         .agg(F.count("*").alias("c"))
     )
-    probe = spark.createDataFrame(
-        [(u,) for u in CMS_PROBE_USERS], "user_id bigint"
+    probe = local_frame(
+        spark, [(u,) for u in CMS_PROBE_USERS], "user_id bigint"
     ).join(F.broadcast(d)).select(
         "user_id",
         "d",

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..numerics import dec, wide_dbl, wide_dbl_sql
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 from .distcum import two_level_cumulative
 
 
@@ -329,7 +329,7 @@ def ts_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").cast("bigint").alias("sx"),
         F.sum(F.col("cnt") * F.col("cnt")).cast("bigint").alias("sxx"),
     )
-    ks = spark.createDataFrame([(k,) for k in ACF_LAGS], "k bigint")
+    ks = local_frame(spark, [(k,) for k in ACF_LAGS], "k bigint")
     a = s.alias("a")
     b = s.alias("b")
     lagged = (
@@ -567,7 +567,7 @@ def ts_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("xs") >= BACKTEST_H + 2)
     fold = _holt_fold_expr(holdout=BACKTEST_H)
     st = series.select("event_type", "xs", fold.alias("st"))
-    hz = spark.createDataFrame([(h,) for h in range(1, BACKTEST_H + 1)], "h int")
+    hz = local_frame(spark, [(h,) for h in range(1, BACKTEST_H + 1)], "h int")
     j = st.join(F.broadcast(hz))
     forecast = F.col("st.level") + F.col("h") * F.col("st.trend")
     actual = F.element_at(
@@ -1266,7 +1266,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("xb").cast("bigint").alias("sb"),
         F.sum(F.col("xb") * F.col("xb")).cast("bigint").alias("sbb"),
     )
-    ks = spark.createDataFrame([(k,) for k in XCORR_LAGS], "k bigint")
+    ks = local_frame(spark, [(k,) for k in XCORR_LAGS], "k bigint")
     a2, b2 = g.alias("a"), g.alias("b2")
     lagged = (
         a2.join(F.broadcast(ks))

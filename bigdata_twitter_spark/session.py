@@ -9,7 +9,10 @@ Scale posture (SURVEY.md §4.2): AQE on (runtime partition coalescing +
 skew-join splitting), broadcast threshold left at default so the
 region/nation/part/supplier dims auto-broadcast, shuffle partitions
 sized for the local harness (AQE coalesces; on a 1000-executor cluster
-this would be set to ~2-3x total cores instead).
+this would be set to ~2-3x total cores instead).  Cached plans are
+coalesced too, so a persisted intermediate holds as many partitions as
+its bytes need: a 30-row loop state is one partition, not 32 mostly
+empty ones that every later scan of it pays a task for.
 """
 
 from __future__ import annotations
@@ -33,6 +36,13 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce the final stage of a cached plan too (off by
+    # default, to keep a cached plan's output partitioning for its
+    # consumers).  A driver loop over a persisted intermediate then
+    # scans the partitions its bytes need — one at fixture scale
+    # instead of 32 mostly empty ones per round; full-size partitions
+    # are not coalesced, so at scale the cache keeps its parallelism.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 

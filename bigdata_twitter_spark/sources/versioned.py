@@ -30,11 +30,12 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import scratch
 from ..numerics import dsum, dsum_sql
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 DELTA_MOD = 4  # every 4th event gets a corrected row in commit 1
 DELTA_BUMP = 50.0  # exact-in-binary value delta (cross-engine safe)
@@ -104,6 +105,46 @@ def commit_next(man_dir: str, files: list[str], max_retries: int = 50) -> int:
     raise CommitConflict(f"gave up after {max_retries} rebases")
 
 
+def manifest_files(root: str, version: int) -> list[str]:
+    """The data dirs (relative to ``root``) that version ``version``
+    of the table at ``root`` names."""
+    with open(os.path.join(root, "_manifests", f"v{version}.json")) as fh:
+        return json.load(fh)["files"]
+
+
+def newest_version(root: str) -> int:
+    """The highest committed version of the table at ``root``."""
+    return max(
+        int(f[1:-5])
+        for f in os.listdir(os.path.join(root, "_manifests"))
+        if f.startswith("v") and f.endswith(".json")
+    )
+
+
+def read_as_of(
+    spark: SparkSession, root: str, version: int, schema: StructType
+) -> DataFrame:
+    """Version ``version`` of the table at ``root``, merge-on-read: the
+    dirs its manifest names, keeping the highest-``commit`` row per
+    ``event_id``.
+
+    ``schema`` is the one the writers used, so the read starts no
+    schema-inference job.  A column missing from an older dir reads as
+    NULL (what ``mergeSchema`` would give).
+    """
+    paths = [
+        os.path.normpath(os.path.join(root, f))
+        for f in manifest_files(root, version)
+    ]
+    df = spark.read.schema(schema).parquet(*paths)
+    w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 @query(
     "table_time_travel",
     sql=f"""
@@ -156,20 +197,9 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for files in (["base"], ["base", "delta1"]):
         commit_next(man_dir, files)
 
-    def read_as_of(version: int) -> DataFrame:
-        with open(os.path.join(man_dir, f"v{version}.json")) as fh:
-            files = json.load(fh)["files"]
-        df = spark.read.parquet(*[os.path.join(root, f) for f in files])
-        w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
     rows = []
     for v in (0, 1):
-        snap = read_as_of(v)
+        snap = read_as_of(spark, root, v, base.schema)
         rows.append(
             snap.agg(
                 F.count("*").cast("bigint").alias("n_rows"),
@@ -179,7 +209,8 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(v).alias("version"), "*")
             .collect()[0]
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, n_rows bigint, sum_value double, n_from_delta bigint",
     )
@@ -236,19 +267,8 @@ def table_compact_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_next(man_dir, ["base"])
     commit_next(man_dir, ["base", "delta1"])
 
-    def read_as_of(version: int) -> DataFrame:
-        with open(os.path.join(man_dir, f"v{version}.json")) as fh:
-            files = json.load(fh)["files"]
-        df = spark.read.parquet(*[os.path.join(root, f) for f in files])
-        w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        ), len(files)
-
     # COMPACTION: materialize v1's resolution once, publish as v2.
-    resolved_v1, _ = read_as_of(1)
+    resolved_v1 = read_as_of(spark, root, 1, base.schema)
     resolved_v1.write.mode("overwrite").parquet(
         os.path.join(root, "compact2")
     )
@@ -256,7 +276,8 @@ def table_compact_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = []
     for v in (1, 2):
-        snap, n_dirs = read_as_of(v)
+        snap = read_as_of(spark, root, v, base.schema)
+        n_dirs = len(manifest_files(root, v))
         rows.append(
             snap.agg(
                 F.count("*").cast("bigint").alias("n_rows"),
@@ -269,8 +290,10 @@ def table_compact_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]
         )
-    return spark.createDataFrame(
-        rows, "version int, n_rows bigint, sum_value double, n_source_dirs int"
+    return local_frame(
+        spark,
+        rows,
+        "version int, n_rows bigint, sum_value double, n_source_dirs int",
     )
 
 
@@ -363,16 +386,15 @@ def table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_next(man_dir, ["base", "delta1"])
 
     # Feed = delta files named by v1 but not v0 (manifest set diff).
-    with open(os.path.join(man_dir, "v0.json")) as fh:
-        v0_files = set(json.load(fh)["files"])
-    with open(os.path.join(man_dir, "v1.json")) as fh:
-        v1_files = json.load(fh)["files"]
-    feed_files = [f for f in v1_files if f not in v0_files]
-    feed = spark.read.parquet(
+    v0_files = set(manifest_files(root, 0))
+    feed_files = [f for f in manifest_files(root, 1) if f not in v0_files]
+    feed = spark.read.schema(delta.schema).parquet(
         *[os.path.join(root, f) for f in feed_files]
     )
-    base_keys = spark.read.parquet(os.path.join(root, "base")).select(
-        F.col("event_id").alias("bk"), F.lit(1).alias("in_base")
+    base_keys = (
+        spark.read.schema(base.schema)
+        .parquet(os.path.join(root, "base"))
+        .select(F.col("event_id").alias("bk"), F.lit(1).alias("in_base"))
     )
     classified = (
         feed.join(base_keys, feed.event_id == base_keys.bk, "left")
@@ -391,8 +413,10 @@ def table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    return spark.createDataFrame(
-        out, "change_type string, event_type string, n bigint, sum_value double"
+    return local_frame(
+        spark,
+        out,
+        "change_type string, event_type string, n bigint, sum_value double",
     )
 
 
@@ -450,18 +474,7 @@ def table_vacuum_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_next(man_dir, ["base"])
     commit_next(man_dir, ["base", "delta1"])
 
-    def read_as_of(version: int) -> DataFrame:
-        with open(os.path.join(man_dir, f"v{version}.json")) as fh:
-            files = json.load(fh)["files"]
-        df = spark.read.parquet(*[os.path.join(root, f) for f in files])
-        w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    resolved_v1 = read_as_of(1)
+    resolved_v1 = read_as_of(spark, root, 1, base.schema)
     resolved_v1.write.mode("overwrite").parquet(
         os.path.join(root, "compact2")
     )
@@ -474,8 +487,7 @@ def table_vacuum_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         data_dirs = sorted(
             d for d in os.listdir(root) if d != "_manifests"
         )
-        newest = max(int(f[1:-5]) for f in manifests)
-        snap = read_as_of(newest)
+        snap = read_as_of(spark, root, newest_version(root), base.schema)
         row = snap.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum("value").alias("sum_value"),
@@ -501,8 +513,7 @@ def table_vacuum_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained = {versions[-1]}
     live: set[str] = set()
     for v in retained:
-        with open(os.path.join(man_dir, f"v{v}.json")) as fh:
-            live |= set(json.load(fh)["files"])
+        live |= set(manifest_files(root, v))
     for v in versions:
         if v not in retained:
             os.unlink(os.path.join(man_dir, f"v{v}.json"))
@@ -511,7 +522,8 @@ def table_vacuum_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(os.path.join(root, d))
 
     rows.append(stats("after"))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "phase string, n_manifests int, n_data_dirs int, "
         "n_rows bigint, sum_value double",
@@ -635,37 +647,20 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "..%ssrc%sdelta1" % (os.sep, os.sep),
                             "delta2"])
 
-    def resolve(table_root: str) -> DataFrame:
-        man_dir = os.path.join(table_root, "_manifests")
-        newest = max(
-            int(f[1:-5])
-            for f in os.listdir(man_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-        with open(os.path.join(man_dir, f"v{newest}.json")) as fh:
-            files = json.load(fh)["files"]
-        df = spark.read.parquet(
-            *[os.path.normpath(os.path.join(table_root, f)) for f in files]
-        )
-        w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
     rows = []
     for name, troot in (
         ("source_after_clone_write", src_root),
         ("clone_evolved", clone_root),
     ):
-        r = resolve(troot).agg(
+        snap = read_as_of(spark, troot, newest_version(troot), base.schema)
+        r = snap.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum("value").alias("sum_value"),
         ).collect()[0]
         n_new = len(data_dirs(troot) - dirs_at_clone[troot])
         rows.append((name, r["n_rows"], r["sum_value"], n_new))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "snapshot string, n_rows bigint, sum_value double, "
         "n_new_data_dirs int",
@@ -835,20 +830,9 @@ def table_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     for files in (["base"], ["base", "delta1"], ["base"]):
         commit_next(man_dir, files)
 
-    def read_as_of(version: int) -> DataFrame:
-        with open(os.path.join(man_dir, f"v{version}.json")) as fh:
-            files = json.load(fh)["files"]
-        df = spark.read.parquet(*[os.path.join(root, f) for f in files])
-        w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
     rows = []
     for v in (0, 1, 2):
-        snap = read_as_of(v)
+        snap = read_as_of(spark, root, v, base.schema)
         rows.append(
             snap.agg(
                 F.count("*").cast("bigint").alias("n_rows"),
@@ -858,7 +842,8 @@ def table_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(v).alias("version"), "*")
             .collect()[0]
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, n_rows bigint, sum_value double, n_from_delta bigint",
     )
@@ -926,22 +911,11 @@ def table_schema_evolution_versioned(
     for files in (["base"], ["base", "delta1"]):
         commit_next(man_dir, files)
 
-    def read_as_of(version: int) -> DataFrame:
-        with open(os.path.join(man_dir, f"v{version}.json")) as fh:
-            files = json.load(fh)["files"]
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(root, f) for f in files]
-        )
-        w = Window.partitionBy("event_id").orderBy(F.col("commit").desc())
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
     rows = []
-    for v in (0, 1):
-        snap = read_as_of(v)
+    # Each version reads with the schema of the newest writer it names:
+    # v0 never saw score_cents; v1's base rows read it as NULL.
+    for v, schema in ((0, base.schema), (1, delta.schema)):
+        snap = read_as_of(spark, root, v, schema)
         has_score = "score_cents" in snap.columns
         score = (
             F.col("score_cents") if has_score else F.lit(None).cast("bigint")
@@ -957,7 +931,8 @@ def table_schema_evolution_versioned(
             .select(F.lit(v).alias("version"), "*")
             .collect()[0]
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, n_rows bigint, n_scored bigint, sum_score_cents bigint",
     )

@@ -34,9 +34,11 @@ import logging
 import os
 import stat
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from . import obs
@@ -161,6 +163,13 @@ def persist_fresh(tag: str, sf_dir: str, df: DataFrame) -> DataFrame:
     bands, candidate pairs — a few machine words per row).  At 100 TB
     the same call is MEMORY_AND_DISK on the cluster cache tier, exactly
     as each operator's scale_note prescribes.
+
+    The cached plan's last stage is coalesced by AQE like any other
+    (``session.RUNTIME_CONFS``), so the cache holds as many partitions
+    as its bytes need: a loop state of a few dozen rows is one
+    partition, and every later scan of it runs one task, not one per
+    shuffle partition.  Full-size partitions are never coalesced, so at
+    scale the cache keeps the shuffle's parallelism.
     """
     key = (tag, sf_dir)
     prev = _PERSIST_REGISTRY.pop(key, None)
@@ -218,16 +227,56 @@ def drop_hot_groups(
     obs.record(name, dropped_groups=len(hot), dropped_rows=dropped_rows)
     if not hot:
         return df
+    log_hot_groups(name, cap, len(hot), dropped_rows)
+    hot_df = local_frame(
+        df.sparkSession,
+        [tuple(r[k] for k in keys) for r in hot],
+        sizes.select(*keys).schema,
+    )
+    return df.join(F.broadcast(hot_df), keys, "left_anti")
+
+
+def log_hot_groups(name: str, cap: int, groups: int, rows: int) -> None:
+    """The one warning every pair miner logs when its hot-group cap
+    drops ``groups`` groups holding ``rows`` rows."""
     _log.warning(
         "%s: hot-group cap (%d) dropped %d group(s) / %d row(s) from "
         "pair mining — run exact dedup upstream if the corpus carries "
         ">cap identical items",
-        name, cap, len(hot), dropped_rows,
+        name, cap, groups, rows,
     )
-    hot_df = df.sparkSession.createDataFrame(
-        [tuple(r[k] for k in keys) for r in hot], sizes.select(*keys).schema
-    )
-    return df.join(F.broadcast(hot_df), keys, "left_anti")
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-built ``rows`` (tuples in ``schema`` order),
+    equal to ``spark.createDataFrame(rows, schema)``, schema and
+    nullability included.
+
+    A Python list given to ``createDataFrame`` becomes a pickled Python
+    RDD: every job that scans it starts a Python worker per partition to
+    unpickle the rows (~120 ms for 8 rows at fixture scale, ~180 ms as a
+    broadcast side), a crossing that no plan node shows.  The same rows
+    as a ``pyarrow.Table`` cross once, on the driver, and plan as a
+    ``LocalTableScan`` (~20 ms).  ``schema`` is a ``StructType`` or a
+    DDL string.  Naive datetimes are read in the process's local zone,
+    as ``createDataFrame`` reads them.
+    """
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    arrays = []
+    for col, field, sfield in zip(cols, arrow, schema.fields):
+        if isinstance(sfield.dataType, T.TimestampType):
+            col = [
+                v.astimezone() if v is not None and v.tzinfo is None else v
+                for v in col
+            ]
+        arrays.append(pa.array(list(col), type=field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

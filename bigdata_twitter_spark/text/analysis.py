@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, local_frame
 
 # Deterministic scoring lexicon over the fixture vocabulary (stands in
 # for e.g. the AFINN/VADER word lists of the reference genre).
@@ -190,7 +190,7 @@ def text_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average lexicon sentiment per document (token-multiplicity weighted)."""
     d = load(spark, sf_dir, "documents")
-    lex = spark.createDataFrame(LEXICON, ["term", "score"])
+    lex = local_frame(spark, LEXICON, "term string, score bigint")
     toks = d.select("doc_id", F.explode(_tokens()).alias("term"))
     scored = (
         toks.join(F.broadcast(lex), "term")
@@ -1630,7 +1630,7 @@ def text_bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 StructField("pair_count", LongType(), False),
             ]
         )
-        return spark.createDataFrame(merges, schema)
+        return local_frame(spark, merges, schema)
     finally:
         vocab.unpersist()
 
@@ -1878,7 +1878,7 @@ def text_bpe_vocab_train_batched(
                 StructField("pair_count", LongType(), False),
             ]
         )
-        return spark.createDataFrame(merges, schema)
+        return local_frame(spark, merges, schema)
     finally:
         vocab.unpersist()
         if trunc is not None:

@@ -101,6 +101,51 @@ def test_bucket_jobs_resume_recomputes_only_missing(spark, sf_dir, tmp_path):
     assert os.path.getmtime(os.path.join(torn, "_SUCCESS")) != mtimes[torn]
 
 
+def test_bucket_jobs_hot_cap_fires_visibly(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """Buckets over the hot cap lose their pairs (the contract shared
+    with sim_pairs_bucketed) and are counted in the run record and
+    logged, never dropped silently; normal corpora report zero drops."""
+    from bigdata_twitter_spark import obs
+    from bigdata_twitter_spark.llm import bucketjobs as bj
+
+    n_dup, n_ok = 12, 6
+    rows = [(i, [1.0] * 64) for i in range(n_dup)]  # identical block
+    for j in range(n_ok):
+        v = [0.0] * 64
+        v[j] = 1.0
+        v[(j + 7) % 64] = -1.0
+        rows.append((1000 + j, v))
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>"
+    ).write.parquet(f"{sf_dir}/embeddings.parquet")
+    block = {(a, b) for a in range(n_dup) for b in range(a + 1, n_dup)}
+
+    monkeypatch.setattr(bj, "HOT_BUCKET_CAP", n_dup - 1)
+    pairs = {
+        (r["a_id"], r["b_id"])
+        for r in bj.sim_pairs_bucket_jobs(spark, sf_dir).collect()
+    }
+    assert not pairs & block, pairs
+    audit = obs.last("sim_pairs_bucket_jobs")
+    assert audit["dropped_groups"] > 0
+    assert audit["dropped_rows"] >= n_dup
+    assert "sim_pairs_bucket_jobs: hot-group cap" in caplog.text
+
+    caplog.clear()
+    monkeypatch.setattr(bj, "HOT_BUCKET_CAP", 10_000)
+    pairs = {
+        (r["a_id"], r["b_id"])
+        for r in bj.sim_pairs_bucket_jobs(spark, sf_dir).collect()
+    }
+    assert block <= pairs
+    audit = obs.last("sim_pairs_bucket_jobs")
+    assert (audit["dropped_groups"], audit["dropped_rows"]) == (0, 0)
+    assert "hot-group cap" not in caplog.text
+
+
 def test_bucket_jobs_oracle_regime_guard(spark, sf_dir, monkeypatch):
     """Past the plane-literal regime (bits_for(n) > ORACLE_BITS_MAX)
     the operator must fail fast under declared exact-oracle intent and
